@@ -70,7 +70,6 @@ from search_engine_spark.operators import textstats as TS
 from search_engine_spark.operators import urls as UR
 from search_engine_spark.operators import webquality as WQ
 from search_engine_spark import twin as TW
-from search_engine_spark.ranking import ranked
 from search_engine_spark.searcher import SearchEngine
 from search_engine_spark.sources.pages import extract_text, load_documents_as_pages
 from search_engine_spark.wand import wand_search
@@ -737,12 +736,9 @@ def q_ft_bm25_topk(spark, sf):
     # driver); the window then ranks only the k surviving rows.  The
     # previous full-table Window.orderBy ranked EVERY row in a single
     # partition — a driver-bottleneck at scale.
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 DISMAX_TIE = 0.3
@@ -778,10 +774,10 @@ def q_ft_dismax_topk(spark, sf):
                 F.round(F.col("mx") + F.lit(DISMAX_TIE)
                         * (F.col("sm") - F.col("mx")), 6).alias("score"))
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
+    order = (F.desc("score"), F.asc("doc_id"))
     return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
+        scored.orderBy(*order).limit(20)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
         .select("doc_id", "score", "rank")
     )
 
@@ -826,10 +822,10 @@ def q_ft_matched_topk(spark, sf):
         F.round(F.sum("c"), 6).alias("score"),
         F.array_join(F.sort_array(F.collect_set("tok")), " ").alias("matched"),
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
+    order = (F.desc("score"), F.asc("doc_id"))
     return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
+        scored.orderBy(*order).limit(20)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
         .select("doc_id", "score", "rank", "matched")
     )
 
@@ -934,12 +930,9 @@ def q_ft_boosted_topk(spark, sf):
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_ft_top_hits(spark, sf):
@@ -1058,12 +1051,9 @@ def q_ft_synonym_topk(spark, sf):
         )
     )
     scored = blended.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_ft_fuzzy_topk(spark, sf):
@@ -1110,23 +1100,22 @@ def q_ft_fuzzy_topk(spark, sf):
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_ft_highlight_topk(spark, sf):
     """The assembled result page, fully SQL-checkable: BM25 top-10
     (the ft_bm25_topk chain) joined to the keyword-in-context excerpt
-    around the earliest query-term hit (the text_snippets kernel) —
-    retrieval and presentation composed in ONE plan.  The snippet pass
-    tokenizes the top-10 documents only (semi-joined to the cut before
-    tokenization, broadcast: provably 10 rows), never the corpus."""
+    around the earliest query-term hit (the text_snippets kernel).
+    The 10-row cut is collected once and feeds both the snippet pass
+    and the final join, so both read the same ranked rows.  The
+    snippet pass tokenizes the top-10 documents only (semi-joined to
+    the cut before tokenization, broadcast), never the corpus."""
     docs = _tbl(spark, sf, "documents")
-    topk = q_ft_bm25_topk(spark, sf).filter(F.col("rank") <= 10)
+    cut = q_ft_bm25_topk(spark, sf).filter(F.col("rank") <= 10)
+    topk = spark.createDataFrame(cut.collect(), cut.schema)
     hits = docs.join(F.broadcast(topk.select("doc_id")), "doc_id")
     snip = SN.best_snippet(hits, list(FT_QUERY_TERMS), 5)
     return (
@@ -1175,14 +1164,11 @@ def q_ft_proximity_topk(spark, sf):
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = (
-        mind.join(scored, "doc_id")
-        .orderBy(F.asc("min_dist"), F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
+    order = (F.asc("min_dist"), F.desc("score"), F.asc("doc_id"))
     return (
-        ranked(topk, [("min_dist", "asc"), ("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
+        mind.join(scored, "doc_id")
+        .orderBy(*order).limit(20)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
         .select("doc_id", "min_dist", "score", "rank")
     )
 
@@ -1233,10 +1219,10 @@ def q_ft_boolean_topk(spark, sf):
         .join(cand, "doc_id", "leftsemi")
         .join(excl, "doc_id", "left_anti")
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
+    order = (F.desc("score"), F.asc("doc_id"))
     return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
+        scored.orderBy(*order).limit(20)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
         .select("doc_id", "score", "rank")
     )
 
@@ -1453,10 +1439,10 @@ def q_ft_msm_topk(spark, sf):
         contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
         .join(cand, "doc_id", "leftsemi")
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
+    order = (F.desc("score"), F.asc("doc_id"))
     return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
+        scored.orderBy(*order).limit(20)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
         .select("doc_id", "score", "rank")
     )
 
@@ -1762,16 +1748,12 @@ def q_revenue_by_nation(spark, sf):
 def q_topk_orders(spark, sf):
     # K4: deterministic global top-50 as TakeOrdered (orderBy+limit),
     # never a single-partition full-table window
-    topk = (
+    order = (F.desc("o_totalprice"), F.asc("o_orderkey"))
+    return (
         _tbl(spark, sf, "orders")
         .select("o_orderkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(50)
-    )
-    return (
-        ranked(topk, [("o_totalprice", "desc"), ("o_orderkey", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("o_orderkey", "o_totalprice", "rank")
+        .orderBy(*order).limit(50)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
     )
 
 
@@ -2009,9 +1991,9 @@ def q_dedup_embedding_cosine(spark, sf):
 def q_ann_cosine_topk(spark, sf):
     emb = _tbl(spark, sf, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return SIM.cosine_topk(emb, qvec, k=10).transform(
-        lambda d: ranked(d, [("cosine", "desc"), ("vec_id", "asc")])
-    ).withColumn("rank", F.col("rank").cast("long"))
+    order = (F.desc("cosine"), F.asc("vec_id"))
+    return SIM.cosine_topk(emb, qvec, k=10).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def _ts_keys(spark, sf):
@@ -2034,10 +2016,10 @@ def q_ft_sort_by_time(spark, sf):
         .select(F.col("doc_id").cast("string").alias("url")).distinct()
     )
     keyed = match.join(_ts_keys(spark, sf), "url")
-    topk = keyed.orderBy(F.desc("sort_key"), F.asc("url")).limit(20)
-    return ranked(topk, [("sort_key", "desc"), ("url", "asc")]).select(
+    order = (F.desc("sort_key"), F.asc("url"))
+    return keyed.orderBy(*order).limit(20).select(
         F.col("url").cast("long").alias("doc_id"), "sort_key",
-        F.col("rank").cast("long").alias("rank"))
+        F.row_number().over(Window.orderBy(*order)).cast("long").alias("rank"))
 
 
 def q_search_sort_by_time(spark, sf):
@@ -2430,10 +2412,9 @@ def q_ann_lsh_topk(spark, sf):
     emb = _tbl(spark, sf, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     lsh_path, _, _ = _ann_layouts_for(spark, sf)
-    out = SIM.ann_lsh_topk_pruned(spark, lsh_path, qvec, k=10)
-    return out.transform(
-        lambda d: ranked(d, [("cosine", "desc"), ("vec_id", "asc")])
-    ).withColumn("rank", F.col("rank").cast("long"))
+    order = (F.desc("cosine"), F.asc("vec_id"))
+    return SIM.ann_lsh_topk_pruned(spark, lsh_path, qvec, k=10).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_ann_ivf_topk(spark, sf):
@@ -2446,10 +2427,9 @@ def q_ann_ivf_topk(spark, sf):
     emb = _tbl(spark, sf, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     _, ivf_path, _ = _ann_layouts_for(spark, sf)
-    out = SIM.ivf_topk_pruned(spark, ivf_path, emb, qvec, k=10)
-    return out.transform(
-        lambda d: ranked(d, [("cosine", "desc"), ("vec_id", "asc")])
-    ).withColumn("rank", F.col("rank").cast("long"))
+    order = (F.desc("cosine"), F.asc("vec_id"))
+    return SIM.ivf_topk_pruned(spark, ivf_path, emb, qvec, k=10).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_ann_pq_topk(spark, sf):
@@ -2540,13 +2520,10 @@ def q_text_more_like_this(spark, sf):
     no corpus pass per query.  Exact same rows as the in-memory
     operator (asserted in tests/test_ireval_mlt.py)."""
     mlt_path = _mlt_index_for(spark, sf)
-    topk = MLT.more_like_this_indexed(
-        spark, mlt_path, _tbl(spark, sf, "documents"), query_doc_id=0, k=10)
-    return (
-        ranked(topk, [("cosine", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "cosine", "rank")
-    )
+    order = (F.desc("cosine"), F.asc("doc_id"))
+    return MLT.more_like_this_indexed(
+        spark, mlt_path, _tbl(spark, sf, "documents"), query_doc_id=0, k=10,
+    ).withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_ir_eval(spark, sf):
@@ -2872,13 +2849,12 @@ def q_search_composite(spark, sf):
         (F.col("doc_id") % 7).cast("long").alias("b7"),
     )
     specs = [("lang", base, "lang"), ("b7", base, "b7")]
-    page1 = eng.search_composite(ENGINE_QUERY, specs, size=5)
-    p1 = ranked(page1, [("lang", "asc"), ("b7", "asc")])
+    rank = F.row_number().over(Window.orderBy(F.asc("lang"), F.asc("b7")))
+    p1 = eng.search_composite(ENGINE_QUERY, specs, size=5).withColumn("rank", rank)
     last = p1.orderBy(F.desc("rank")).limit(1).collect()[0]
-    page2 = eng.search_composite(
-        ENGINE_QUERY, specs, size=5, after=(last["lang"], last["b7"]))
-    p2 = ranked(page2, [("lang", "asc"), ("b7", "asc")]).withColumn(
-        "rank", F.col("rank") + 5)
+    p2 = eng.search_composite(
+        ENGINE_QUERY, specs, size=5, after=(last["lang"], last["b7"]),
+    ).withColumn("rank", rank + 5)
     engine_pages = p1.unionByName(p2)
     twin10 = TW.twin_composite(spark, eng, ENGINE_QUERY, specs, 10)
     return _rank_eq(engine_pages, twin10,
@@ -3617,12 +3593,9 @@ def q_ft_phrase_topk(spark, sf):
     for p in parts[1:]:
         base = base.join(p, ["doc_id", "base"])
     m = base.groupBy("doc_id").agg(F.count(F.lit(1)).alias("phrase_tf"))
-    topk = m.orderBy(F.desc("phrase_tf"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("phrase_tf", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "phrase_tf", "rank")
-    )
+    order = (F.desc("phrase_tf"), F.asc("doc_id"))
+    return m.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_phrase(spark, sf):
@@ -3655,9 +3628,9 @@ def q_ft_phrase_prefix(spark, sf):
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("phrase_tf"))
     )
-    topk = m.orderBy(F.desc("phrase_tf"), F.asc("doc_id")).limit(20)
-    return ranked(topk, [("phrase_tf", "desc"), ("doc_id", "asc")]).select(
-        "doc_id", "phrase_tf", F.col("rank").cast("long").alias("rank"))
+    order = (F.desc("phrase_tf"), F.asc("doc_id"))
+    return m.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_phrase_prefix(spark, sf):
@@ -3701,12 +3674,9 @@ def q_ft_span_near_topk(spark, sf):
                 & (F.col(f"p{i}") <= F.col("p0") + F.lit(max_span))
             )
     m = chain.groupBy("doc_id").agg(F.count(F.lit(1)).alias("span_tf"))
-    topk = m.orderBy(F.desc("span_tf"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("span_tf", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "span_tf", "rank")
-    )
+    order = (F.desc("span_tf"), F.asc("doc_id"))
+    return m.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_span_near(spark, sf):
@@ -3747,12 +3717,9 @@ def q_ft_span_unordered_topk(spark, sf):
     ps = [F.col(f"p{i}") for i in range(len(SPAN_TERMS))]
     chain = chain.filter(F.greatest(*ps) - F.least(*ps) <= F.lit(max_span))
     m = chain.groupBy("doc_id").agg(F.count(F.lit(1)).alias("span_tf"))
-    topk = m.orderBy(F.desc("span_tf"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("span_tf", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "span_tf", "rank")
-    )
+    order = (F.desc("span_tf"), F.asc("doc_id"))
+    return m.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_span_unordered(spark, sf):
@@ -3818,12 +3785,9 @@ def q_ft_tree_topk(spark, sf):
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_tree(spark, sf):
@@ -3909,12 +3873,11 @@ def q_ft_rescore_topk(spark, sf):
                     F.lit(RESCORE_WEIGHT) / (F.lit(1.0) + F.col("min_dist")),
                 ).otherwise(F.lit(0.0)), 6))
     )
-    topk = out.orderBy(F.desc("rescore"), F.asc("doc_id")).limit(20)
+    order = (F.desc("rescore"), F.asc("doc_id"))
     return (
-        ranked(topk.select("doc_id", "min_dist", "rescore"),
-               [("rescore", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "min_dist", "rescore", "rank")
+        out.orderBy(*order).limit(20)
+        .select("doc_id", "min_dist", "rescore")
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
     )
 
 
@@ -4046,14 +4009,14 @@ def q_search_hybrid_rrf(spark, sf):
     consumes only RANKS, so any packed-index scoring divergence
     surfaces as a lex_rank / rrf_nano mismatch."""
     eng = _engine_for(spark, sf)
-    dense = (
+    # both fusions read the dense leg: collect its k rows once so the
+    # two fusions see one execution of it
+    dense = spark.createDataFrame(
         HY.dense_mips_topk(
             _tbl(spark, sf, "documents"), ENGINE_QUERY.split(), k=20)
-        .withColumn("url", F.col("doc_id").cast("string"))
-        .select("url", "rank")
-    )
-    # one materialization feeds BOTH fusions: the legs must agree
-    dense = dense.localCheckpoint(eager=False)
+        .select(F.col("doc_id").cast("string").alias("url"), "rank")
+        .collect(),
+        "url string, rank long")
     e_f = HY.rrf_fuse(eng.search(ENGINE_QUERY, 20).select("url", "rank"),
                       dense, 10, id_col="url")
     t_f = HY.rrf_fuse(TW.twin_bm25_topk(spark, eng, ENGINE_QUERY, 20)
@@ -4104,12 +4067,9 @@ def q_ft_prefix_topk(spark, sf):
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_wildcard(spark, sf):
@@ -4274,12 +4234,9 @@ def q_ft_prf_topk(spark, sf):
         spark.createDataFrame([(t,) for t in FT_QUERY_TERMS], "tok string")
     ).distinct()
     # <= FT_PRF_FB_TERMS + |query| rows — broadcast safe
-    topk = bm25_topk(tf.join(F.broadcast(terms), "tok"), 20)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return bm25_topk(tf.join(F.broadcast(terms), "tok"), 20).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_prf(spark, sf):
@@ -4481,7 +4438,8 @@ def q_ft_search_after(spark, sf):
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    top10 = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+    order = (F.desc("score"), F.asc("doc_id"))
+    top10 = scored.orderBy(*order).limit(10)
     # the cursor = last row of page 1: smallest score, ties -> largest
     # doc_id, i.e. the min of (score, -doc_id) over the 10-row cut
     cur = (
@@ -4497,14 +4455,11 @@ def q_ft_search_after(spark, sf):
             | ((F.col("score") == F.col("_cs")) & (F.col("doc_id") > F.col("_cd")))
         )
         .select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .orderBy(*order)
         .limit(10)
     )
-    return (
-        ranked(page, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    return page.withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def q_search_after(spark, sf):

@@ -39,12 +39,11 @@ rows and two scalars — exactly what a distributed IDF fetch costs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import DEFAULT, EngineConfig
-from .ranking import ranked
-from .searcher import SearchEngine
+from .searcher import TOPK_SCHEMA, SearchEngine
 
 
 def open_members(spark: SparkSession, index_dirs: list[str],
@@ -102,7 +101,7 @@ def federated_search(spark: SparkSession, index_dirs: list[str],
     keys = engines[0].parse_query(query)
 
     def empty() -> DataFrame:
-        return spark.createDataFrame([], "url string, score double, rank int")
+        return spark.createDataFrame([], TOPK_SCHEMA)
 
     if not keys:
         return empty()
@@ -139,6 +138,6 @@ def federated_search(spark: SparkSession, index_dirs: list[str],
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)
-    topk = union.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")]).select(
-        "url", "score", "rank")
+    order = (F.desc("score"), F.asc("url"))
+    return (union.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))

@@ -32,8 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ranking import ranked
-
 
 def collapse_run(run: DataFrame, group_col: str = "host",
                  per_group: int = 2, k: int = 10,
@@ -56,8 +54,9 @@ def collapse_run(run: DataFrame, group_col: str = "host",
         .filter(F.col("_gpos") <= per_group)
         .drop("_gpos")
     )
-    topk = kept.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
-    return ranked(topk, [(score_col, "desc"), (id_col, "asc")])
+    order = (F.desc(score_col), F.asc(id_col))
+    return (kept.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def collapse_run_agg(run: DataFrame, group_col: str = "host",
@@ -93,5 +92,6 @@ def collapse_run_agg(run: DataFrame, group_col: str = "host",
             F.col("sv.id").alias(id_col),
         )
     )
-    topk = kept.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
-    return ranked(topk, [(score_col, "desc"), (id_col, "asc")])
+    order = (F.desc(score_col), F.asc(id_col))
+    return (kept.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))

@@ -39,10 +39,9 @@ oracle reproduces and the 6dp round absorbs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ranking import ranked
 from .textstats import simple_tokens
 
 DEFAULT_TITLE_TOKENS = 8
@@ -130,9 +129,6 @@ def bm25f_topk(docs: DataFrame, query_terms: list[str], k: int = 20,
                     / (F.lit(float(k1)) + F.col("wtf")))
         .groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return (
-        ranked(topk, [("score", "desc"), ("doc_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("doc_id", "score", "rank")
-    )
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))

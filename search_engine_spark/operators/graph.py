@@ -38,7 +38,7 @@ Scale shape (100 TB / 1e12-edge graphs):
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 NANO = 10**9
@@ -264,25 +264,17 @@ def anchor_search(stats: DataFrame, terms: list[str] | tuple[str, ...],
     whole query touches only the query terms' rows — the df agg is
     |terms| rows, its join back is AQE-broadcast, and the per-target
     sum is one map-side-combining agg over the filtered slice."""
-    from ..ranking import ranked
-
-    top = (_anchor_scored(stats, terms)
-           .orderBy(F.desc("anchor_score"), F.asc("dst")).limit(k))
-    return ranked(top, [("anchor_score", "desc"), ("dst", "asc")])
-
-
-def _anchor_scored(stats: DataFrame, terms) -> DataFrame:
-    """Pre-top-k anchor scoring (kept separate so plan tests can
-    assert on the un-checkpointed frame — ``ranked`` localCheckpoints
-    its input and hides the upstream scan)."""
     q = stats.filter(F.col("term").isin(list(terms)))
     dfq = q.groupBy("term").agg(F.countDistinct("dst").alias("df"))
+    order = (F.desc("anchor_score"), F.asc("dst"))
     return (
         q.join(dfq, "term")
         .select("dst",
                 (F.col("n_links") * F.expr(f"{NANO_REL} div df")).alias("w"))
         .groupBy("dst")
         .agg(F.sum("w").cast("long").alias("anchor_score"))
+        .orderBy(*order).limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
 
 
@@ -580,11 +572,9 @@ def blend_prior(run: DataFrame, prior: DataFrame,
             ).cast("long")
         ).alias("blended_micro"),
     )
-    from ..ranking import ranked
-
-    top = blended.orderBy(
-        F.desc("blended_micro"), F.asc("doc_id")).limit(k)
-    return ranked(top, [("blended_micro", "desc"), ("doc_id", "asc")])
+    order = (F.desc("blended_micro"), F.asc("doc_id"))
+    return (blended.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 # ---------------------------------------------------------------------------

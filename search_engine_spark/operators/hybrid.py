@@ -34,10 +34,9 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ranking import ranked
 from .embed import DEFAULT_DIMS, _dim_col, _sign_col
 from .textstats import shared_doc_tf
 
@@ -80,9 +79,9 @@ def lexical_bm25_topk(docs: DataFrame, terms: list[str], k: int) -> DataFrame:
         )
     )
     scored = contrib.groupBy("doc_id").agg(F.round(F.sum("c"), 6).alias("score"))
-    topk = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return ranked(topk, [("score", "desc"), ("doc_id", "asc")]) \
-        .withColumn("rank", F.col("rank").cast("long"))
+    order = (F.desc("score"), F.asc("doc_id"))
+    return scored.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def dense_mips_topk(docs: DataFrame, terms: list[str], k: int,
@@ -109,9 +108,9 @@ def dense_mips_topk(docs: DataFrame, terms: list[str], k: int,
         .groupBy("doc_id")
         .agg(F.sum(F.col("v") * F.col("qv")).alias("dot"))
     )
-    topk = dot.orderBy(F.desc("dot"), F.asc("doc_id")).limit(k)
-    return ranked(topk, [("dot", "desc"), ("doc_id", "asc")]) \
-        .withColumn("rank", F.col("rank").cast("long"))
+    order = (F.desc("dot"), F.asc("doc_id"))
+    return dot.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def rrf_fuse(lex: DataFrame, dense: DataFrame, k: int,
@@ -138,10 +137,9 @@ def rrf_fuse(lex: DataFrame, dense: DataFrame, k: int,
              ).cast("long"),
         )
     )
-    topk = contrib.orderBy(F.desc("rrf_nano"), F.asc(id_col)).limit(k)
-    return ranked(topk, [("rrf_nano", "desc"), (id_col, "asc")]) \
-        .withColumn("rank", F.col("rank").cast("long")) \
-        .select(id_col, "lex_rank", "dense_rank", "rrf_nano", "rank")
+    order = (F.desc("rrf_nano"), F.asc(id_col))
+    return contrib.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def hybrid_rrf_topk(docs: DataFrame, terms: list[str], k: int = 10,

@@ -31,10 +31,8 @@ an O(window) prior join.  The rescore is pure codegen arithmetic on
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from ..ranking import ranked
 
 MICRO = 1_000_000
 
@@ -103,9 +101,9 @@ def ltr_rescore(features: DataFrame, weights: dict[str, float],
         term = F.lit(w_micro) * f_micro
         expr = term if expr is None else expr + term
     scored = features.withColumn("ltr_micro", expr.cast("long"))
-    topk = scored.orderBy(F.desc("ltr_micro"), F.asc("url")).limit(k)
+    order = (F.desc("ltr_micro"), F.asc("url"))
     return (
-        ranked(topk.select("url", "ltr_micro"),
-               [("ltr_micro", "desc"), ("url", "asc")])
-        .select("url", "ltr_micro", "rank")
+        scored.orderBy(*order).limit(k)
+        .select("url", "ltr_micro")
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )

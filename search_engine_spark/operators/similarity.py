@@ -14,7 +14,7 @@ Both tie-break (score desc, vec_id asc).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -374,8 +374,6 @@ def knn_join_exact(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> Dat
     """Batch exact kNN join: for every query row (qid, embedding),
     the k nearest corpus vectors.  Broadcast the (small) query side;
     per-corpus-row arithmetic stays JVM-side; window top-k per qid."""
-    from pyspark.sql import Window
-
     e = embeddings.select(
         F.col("vec_id"), F.col("embedding").alias("v"), _norm_col(F.col("embedding")).alias("vn")
     )
@@ -467,8 +465,6 @@ def ann_int8_topk(embeddings: DataFrame, query_id: int = 0,
     an orderBy().limit() — TakeOrderedAndProject, per-partition heaps
     + a k-row driver merge, never a global sort — and the rank column
     is stamped on the k-row result."""
-    from ..ranking import ranked
-
     q = quantize_embeddings(embeddings)
     qv = q.filter(F.col("vec_id") == query_id).select(
         F.col("qvec").alias("q_qvec"))
@@ -476,9 +472,9 @@ def ann_int8_topk(embeddings: DataFrame, query_id: int = 0,
         "vec_id",
         _int_dot(F.col("qvec"), F.col("q_qvec")).alias("dot_int"),
     )
-    topk = scored.orderBy(F.desc("dot_int"), F.asc("vec_id")).limit(k)
-    return ranked(topk, [("dot_int", "desc"), ("vec_id", "asc")]).select(
-        "vec_id", "dot_int", F.col("rank").cast("long").alias("rank"))
+    order = (F.desc("dot_int"), F.asc("vec_id"))
+    return scored.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def write_quantized_embeddings(embeddings: DataFrame, path: str,
@@ -512,8 +508,6 @@ def ann_int8_topk_stored(spark, path: str, query_vec: list[float],
     import math
     import os
 
-    from ..ranking import ranked
-
     with open(os.path.join(path, "_quant_meta.json")) as fh:
         meta = json.load(fh)
     absmax = float(meta["absmax"]) or 1.0
@@ -529,9 +523,9 @@ def ann_int8_topk_stored(spark, path: str, query_vec: list[float],
         _int_dot(F.col("qvec"),
                  F.array(*[F.lit(v).cast("long") for v in qq])).alias("dot_int"),
     )
-    topk = scored.orderBy(F.desc("dot_int"), F.asc("vec_id")).limit(k)
-    return ranked(topk, [("dot_int", "desc"), ("vec_id", "asc")]).select(
-        "vec_id", "dot_int", F.col("rank").cast("long").alias("rank"))
+    order = (F.desc("dot_int"), F.asc("vec_id"))
+    return scored.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 # ---------------------------------------------------------------------------
@@ -628,14 +622,9 @@ def pq_adc_topk(codes: DataFrame, books, query_vec: list[float],
         .join(F.broadcast(dtab), ["s", "code"])
         .groupBy("vec_id").agg(F.sum("d").cast("long").alias("adc"))
     )
-    topk = adc.orderBy(F.asc("adc"), F.asc("vec_id")).limit(k)
-    from ..ranking import ranked
-
-    return (
-        ranked(topk, [("adc", "asc"), ("vec_id", "asc")])
-        .withColumn("rank", F.col("rank").cast("long"))
-        .select("vec_id", "adc", "rank")
-    )
+    order = (F.asc("adc"), F.asc("vec_id"))
+    return adc.orderBy(*order).limit(k).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)).cast("long"))
 
 
 def write_pq_index(embeddings: DataFrame, path: str, m: int = PQ_M,

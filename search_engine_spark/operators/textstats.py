@@ -9,7 +9,7 @@ exact DuckDB-SQL oracle in ``__spark_entry__``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # shared simple tokenization (distinct from the search-engine parser:
@@ -99,8 +99,6 @@ def related_terms(docs: DataFrame, seed: str, k: int = 15,
     corpus-wide term stats a real deployment already stores (the
     dictionary) — recomputed here from tf so the row is closed over
     the driver tables."""
-    from ..ranking import ranked
-
     tf = shared_doc_tf(docs)
     seed_docs = tf.filter(F.col("tok") == seed).select("doc_id")
     df_seed = seed_docs.count()
@@ -124,8 +122,9 @@ def related_terms(docs: DataFrame, seed: str, k: int = 15,
                    "AS LONG)").alias("jaccard_micro"),
         )
     )
-    top = scored.orderBy(F.desc("jaccard_micro"), F.asc("term")).limit(k)
-    return ranked(top, [("jaccard_micro", "desc"), ("term", "asc")])
+    order = (F.desc("jaccard_micro"), F.asc("term"))
+    return (scored.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -323,8 +322,6 @@ def significant_terms(docs: DataFrame, fg_docs: DataFrame, k: int = 15,
     docs' rows only; bg_df joins only the foreground's OWN candidate
     terms (left-semi restricted — in production it reads the stored
     dictionary instead); the final cut is TakeOrderedAndProject."""
-    from ..ranking import ranked
-
     spark = docs.sparkSession
     tf = shared_doc_tf(docs)
     n_corpus = tf.select("doc_id").distinct().count()
@@ -350,7 +347,6 @@ def significant_terms(docs: DataFrame, fg_docs: DataFrame, k: int = 15,
                    f"DIV (bg_df * {n_fg}) AS LONG)").alias("lift_nano"),
         )
     )
-    top = scored.orderBy(F.desc("lift_nano"), F.desc("fg_df"),
-                         F.asc("term")).limit(k)
-    return ranked(top, [("lift_nano", "desc"), ("fg_df", "desc"),
-                        ("term", "asc")])
+    order = (F.desc("lift_nano"), F.desc("fg_df"), F.asc("term"))
+    return (scored.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))

@@ -30,12 +30,12 @@ from pyspark.sql import functions as F
 from .codec import bm25_contribution, unpack_bits, varint_decode, delta_decode
 from .config import DEFAULT, EngineConfig
 from .indexer import IndexPaths
-from .ranking import ranked
 from .textproc import parse_doc
 
 UNPACKED_SCHEMA = (
     "term_key string, shard int, local_id long, contrib double, bonus double"
 )
+TOPK_SCHEMA = "url string, score double, rank int"  # every (url, score) top-k frame
 
 _UNSET = object()  # lazy-cache sentinel (a DataFrame must not be truth-tested)
 
@@ -477,13 +477,11 @@ class SearchEngine:
                 members |= set(self.parse_query(syn))
             groups.setdefault(keys[0], set()).update(members)
         if not groups:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         all_keys = sorted(set().union(*groups.values()))
         resolved = self.resolve_terms(all_keys)
         if resolved.empty:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         # group idf = min member idf (= max df) over the members that
         # actually resolve; groups with no resolved member drop out
@@ -496,8 +494,7 @@ class SearchEngine:
             g_idf[gid] = min(idf_by_key[m] for m in present)
             mem_rows.extend((m, gid) for m in present)
         if not mem_rows:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         mem = self.spark.createDataFrame(
             mem_rows, "term_key string, gid string")
         idf_map = F.create_map(
@@ -573,14 +570,14 @@ class SearchEngine:
         k = k or self.cfg.top_k
         resolved = self.resolve_terms(term_keys)
         if resolved.empty:
-            return self.spark.createDataFrame([], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         per_posting = self._drop_deleted(
             self._unpack(self._scan_index(resolved), idf_by_key))
         if cities:
             allowed = self._city_doc_set(cities)
             if allowed is None:
-                return self.spark.createDataFrame([], "url string, score double, rank int")
+                return self.spark.createDataFrame([], TOPK_SCHEMA)
             # no forced broadcast: for a common city term the allowed
             # set is O(N) docs — an unbounded explicit broadcast OOMs
             # the driver at scale.  AQE broadcasts it when it is
@@ -624,7 +621,7 @@ class SearchEngine:
         k = k or self.cfg.top_k
         resolved = self.resolve_terms(self.parse_query(query))
         if resolved.empty:
-            return self.spark.createDataFrame([], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         per_posting = self._drop_deleted(
             self._unpack(self._scan_index(resolved), idf_by_key))
@@ -641,27 +638,20 @@ class SearchEngine:
             .join(self._doc_map(), ["shard", "local_id"])
             .select("url", "score")
         )
-        topk = scored.orderBy(F.desc("score"), F.asc("url")).limit(k)
-        return (
-            ranked(topk, [("score", "desc"), ("url", "asc")])
-            .select("url", "score", "rank")
-        )
+        order = (F.desc("score"), F.asc("url"))
+        return (scored.orderBy(*order).limit(k)
+                .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
     def _score_topk(self, per_posting: DataFrame, k: int) -> DataFrame:
         """Shared scoring tail: per-doc BM25 + importance-bonus blend,
-        deterministic (score desc, url asc) top-k with window-free
-        ranks.  orderBy+limit plans as TakeOrderedAndProject
-        (per-partition heaps, k rows total); the rank is then attached
-        over only those k rows (ranking.ranked)."""
-        topk = (
-            self._doc_scores(per_posting)
-            .orderBy(F.desc("score"), F.asc("url"))
-            .limit(k)
-        )
-        return (
-            ranked(topk, [("score", "desc"), ("url", "asc")])
-            .select("url", "score", "rank")
-        )
+        deterministic (score desc, url asc) top-k with 1-based ranks.
+        orderBy+limit plans as TakeOrderedAndProject (per-partition
+        heaps, k rows total); the row_number window above it ranks
+        only those k rows, in one execution of the cut, so no rank
+        can disagree with the row order it is attached to."""
+        order = (F.desc("score"), F.asc("url"))
+        return (self._doc_scores(per_posting).orderBy(*order).limit(k)
+                .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
     def _match_sets(self, queries: list[tuple[str, str]]) -> DataFrame | None:
         """(qid, shard, local_id) distinct LIVE matches per named query
@@ -784,9 +774,10 @@ class SearchEngine:
             .join(self._doc_map(), ["shard", "local_id"])
             .select("url", "score", "matched")
         )
-        topk = scored.orderBy(F.desc("score"), F.asc("url")).limit(k)
+        order = (F.desc("score"), F.asc("url"))
         return (
-            ranked(topk, [("score", "desc"), ("url", "asc")])
+            scored.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
             .select("url", "score", "rank", "matched")
         )
 
@@ -834,8 +825,8 @@ class SearchEngine:
 
         Implemented as a deterministic top-(page·k) cut + rank slice,
         NOT a float-score cursor: the engine's score is a shuffle-
-        order-dependent double sum (±1 ulp between executions —
-        ranking.ranked documents the hazard), so a Lucene-style
+        order-dependent double sum (±1 ulp between executions on a
+        cluster, summed in shuffle-fetch order), so a Lucene-style
         searchAfter cursor comparing ``score < s`` could duplicate or
         skip a boundary row across pages.  The slice is exact; the
         cost is the classic deep-paging tradeoff (the heap grows with
@@ -874,7 +865,7 @@ class SearchEngine:
         k = k or self.cfg.top_k
         resolved = self.resolve_terms(self.parse_query(query))
         if resolved.empty:
-            return self.spark.createDataFrame([], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         scores = self._doc_scores(self._drop_deleted(
             self._unpack(self._scan_index(resolved), idf_by_key)))
@@ -882,6 +873,7 @@ class SearchEngine:
             scores.filter(F.col("url") == after_url)
             .select(F.col("score").alias("_cs"), F.col("url").alias("_cu"))
         )
+        order = (F.desc("score"), F.asc("url"))
         page = (
             scores.crossJoin(F.broadcast(cur))  # 0- or 1-row cursor
             .filter(
@@ -889,13 +881,10 @@ class SearchEngine:
                 | ((F.col("score") == F.col("_cs")) & (F.col("url") > F.col("_cu")))
             )
             .select("url", "score")
-            .orderBy(F.desc("score"), F.asc("url"))
+            .orderBy(*order)
             .limit(k)
         )
-        return (
-            ranked(page, [("score", "desc"), ("url", "asc")])
-            .select("url", "score", "rank")
-        )
+        return page.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
 
     def search_filtered(self, query: str, allowed: DataFrame,
                         k: int | None = None) -> DataFrame:
@@ -923,7 +912,7 @@ class SearchEngine:
         k = k or self.cfg.top_k
         resolved = self.resolve_terms(self.parse_query(query))
         if resolved.empty:
-            return self.spark.createDataFrame([], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         per_posting = self._drop_deleted(
             self._unpack(self._scan_index(resolved), idf_by_key))
@@ -977,8 +966,7 @@ class SearchEngine:
             # as resolve_terms
             corrected |= {r.suggestion for r in sugg.collect()}
         if not corrected:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(corrected), k)
 
     def did_you_mean(self, query: str, max_dist: int = 2,
@@ -1018,8 +1006,7 @@ class SearchEngine:
                                  gain=gain).collect()
         keys = sorted({r["suggestion"] for r in rows})
         if not keys:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(keys, k)
 
     def wildcard_search(self, query: str, k: int | None = None,
@@ -1052,8 +1039,7 @@ class SearchEngine:
         keys = set(self.parse_query(plain)) if plain.strip() else set()
         keys |= set(self._expand_prefixes(prefixes, max_expansions))
         if not keys:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def _expand_prefixes(self, prefixes: list[str],
@@ -1109,11 +1095,8 @@ class SearchEngine:
             sort_keys.select("url", F.col(key_col).alias("sort_key")), "url")
         order = [F.desc("sort_key") if descending else F.asc("sort_key"),
                  F.asc("url")]
-        topk = keyed.orderBy(*order).limit(k)
-        return ranked(
-            topk,
-            [("sort_key", "desc" if descending else "asc"), ("url", "asc")],
-        ).select("url", "sort_key", "rank")
+        return (keyed.orderBy(*order).limit(k)
+                .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
     def wildcard_search_indexed(self, query: str, kgram_path: str,
                                 k: int | None = None,
@@ -1141,8 +1124,7 @@ class SearchEngine:
                 self.spark, kgram_path, patterns, max_expansions)
             keys |= {r.term for r in exp.select("term").distinct().collect()}
         if not keys:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     @staticmethod
@@ -1186,8 +1168,7 @@ class SearchEngine:
                                term_col="term_key", df_col="df")
             keys |= {r.term for r in exp.select("term").distinct().collect()}
         if not keys:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def regex_search_indexed(self, query: str, kgram_path: str,
@@ -1211,8 +1192,7 @@ class SearchEngine:
                 self.spark, kgram_path, patterns, max_expansions)
             keys |= {r.term for r in exp.select("term").distinct().collect()}
         if not keys:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def query_string_search(self, qs: str, k: int | None = None,
@@ -1258,8 +1238,7 @@ class SearchEngine:
         keys = set(self.parse_query(" ".join(should))) if should else set()
         keys |= set(wild_keys)
         if not keys:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def boosted_search(self, qs: str, k: int | None = None) -> DataFrame:
@@ -1301,8 +1280,7 @@ class SearchEngine:
         both score parts."""
         resolved = self.resolve_terms(sorted(boosts))
         if resolved.empty:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         per = self._drop_deleted(
             self._unpack(self._scan_index(resolved), idf_by_key))
@@ -1388,8 +1366,7 @@ class SearchEngine:
             r["url"] for r in self.search(query, fb_docs).select("url").collect()
         ]
         if not fb_urls:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         tv = fetch_term_vectors(self.spark, tv_path, fb_urls)
         cand = tv.groupBy("term_key").agg(F.sum("tf").alias("tf_sum"))
         if keys:
@@ -1440,8 +1417,7 @@ class SearchEngine:
         k = k or self.cfg.top_k
 
         def empty() -> DataFrame:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
 
         must_keys = self.parse_query(must) if must.strip() else []
         should_keys = self.parse_query(should) if should.strip() else []
@@ -1529,8 +1505,7 @@ class SearchEngine:
         k = k or self.cfg.top_k
 
         def empty() -> DataFrame:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int")
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
 
         # walk: collect leaf keys + score polarity, validate shape
         leaves: list[tuple[str, bool]] = []
@@ -1712,14 +1687,12 @@ class SearchEngine:
                 F.count(F.lit(1)).alias("phrase_tf")
             )
         )
-        topk = (
-            matches.join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(F.desc("phrase_tf"), F.asc("url"))
-            .limit(k)
-        )
+        order = (F.desc("phrase_tf"), F.asc("url"))
         return (
-            ranked(topk.select("url", "phrase_tf"), [("phrase_tf", "desc"), ("url", "asc")])
-            .select("url", "phrase_tf", "rank")
+            matches.join(self._doc_map(), ["shard", "local_id"])
+            .orderBy(*order).limit(k)
+            .select("url", "phrase_tf")
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         )
 
     def phrase_prefix_search(self, phrase: str, k: int | None = None,
@@ -1781,15 +1754,12 @@ class SearchEngine:
             base.groupBy("shard", "local_id").agg(
                 F.count(F.lit(1)).alias("phrase_tf"))
         )
-        topk = (
-            matches.join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(F.desc("phrase_tf"), F.asc("url"))
-            .limit(k)
-        )
+        order = (F.desc("phrase_tf"), F.asc("url"))
         return (
-            ranked(topk.select("url", "phrase_tf"),
-                   [("phrase_tf", "desc"), ("url", "asc")])
-            .select("url", "phrase_tf", "rank")
+            matches.join(self._doc_map(), ["shard", "local_id"])
+            .orderBy(*order).limit(k)
+            .select("url", "phrase_tf")
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         )
 
     def span_near_search(self, phrase: str, slop: int = 0,
@@ -1870,15 +1840,12 @@ class SearchEngine:
             chain.groupBy("shard", "local_id").agg(
                 F.count(F.lit(1)).alias("span_tf"))
         )
-        topk = (
-            matches.join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(F.desc("span_tf"), F.asc("url"))
-            .limit(k)
-        )
+        order = (F.desc("span_tf"), F.asc("url"))
         return (
-            ranked(topk.select("url", "span_tf"),
-                   [("span_tf", "desc"), ("url", "asc")])
-            .select("url", "span_tf", "rank")
+            matches.join(self._doc_map(), ["shard", "local_id"])
+            .orderBy(*order).limit(k)
+            .select("url", "span_tf")
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         )
 
     def rescore_search(self, query: str, k: int | None = None,
@@ -1912,11 +1879,14 @@ class SearchEngine:
             raise ValueError(f"window ({window}) must be >= k ({k})")
         empty = self.spark.createDataFrame(
             [], "url string, min_dist long, rescore double, rank int")
-        first = self.search(query, window)
-        if not first.take(1):
+        # the window is read by both the positional semi-join and the
+        # final join below: collect it once so both see the same rows
+        first = self.search(query, window).collect()
+        if not first:
             return empty
         cand = (
-            first.select("url", "score")
+            self.spark.createDataFrame(first, TOPK_SCHEMA)
+            .select("url", "score")
             .join(self._doc_map(), "url")
             .select("shard", "local_id", "url", "score")
         )
@@ -1955,6 +1925,7 @@ class SearchEngine:
             out = out.join(mind, ["shard", "local_id"], "left")
         else:
             out = out.withColumn("min_dist", F.lit(None).cast("long"))
+        order = (F.desc("rescore"), F.asc("url"))
         out = (
             out.withColumn(
                 "min_dist",
@@ -1965,14 +1936,11 @@ class SearchEngine:
                     F.col("min_dist") >= 0,
                     F.lit(float(weight)) / (F.lit(1.0) + F.col("min_dist")),
                 ).otherwise(F.lit(0.0)))
-            .orderBy(F.desc("rescore"), F.asc("url"))
+            .orderBy(*order)
             .limit(k)
+            .select("url", "min_dist", "rescore")
         )
-        return (
-            ranked(out.select("url", "min_dist", "rescore"),
-                   [("rescore", "desc"), ("url", "asc")])
-            .select("url", "min_dist", "rescore", "rank")
-        )
+        return out.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
 
     def _unpack_position_arrays(self, scan: DataFrame) -> DataFrame:
         """(term_key, shard, local_id, poss) — one row per POSTING
@@ -2076,16 +2044,13 @@ class SearchEngine:
             .withColumn("score", F.lit(blend_a) * F.col("bm25")
                         + F.lit(blend_b) * F.col("bonus"))
         )
-        topk = (
+        order = (F.asc("min_dist"), F.desc("score"), F.asc("url"))
+        return (
             mind.join(scores, ["shard", "local_id"])
             .join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(F.asc("min_dist"), F.desc("score"), F.asc("url"))
-            .limit(k)
-        )
-        return (
-            ranked(topk.select("url", "min_dist", "score"),
-                   [("min_dist", "asc"), ("score", "desc"), ("url", "asc")])
-            .select("url", "min_dist", "score", "rank")
+            .orderBy(*order).limit(k)
+            .select("url", "min_dist", "score")
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         )
 
     def explain_score(self, query: str, url: str) -> DataFrame:
@@ -2154,8 +2119,7 @@ class SearchEngine:
             [], "url string, score double, rank int, match_pos long, snippet string")
         if not rows:
             return empty
-        run = self.spark.createDataFrame(
-            rows, "url string, score double, rank int")
+        run = self.spark.createDataFrame(rows, TOPK_SCHEMA)
         urls = [r["url"] for r in rows]
         resolved = self.resolve_terms(self.parse_query(query))
         pos = self._drop_deleted(

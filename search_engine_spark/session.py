@@ -14,6 +14,26 @@ from pyspark import SparkConf
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str) -> str:
+    """Driver-heap default from the text of ``/proc/meminfo``: half of
+    MemTotal, capped at 24g.  A fixed 24g heap on a smaller host lets
+    the JVM grow past physical memory and get OOM-killed; half leaves
+    room for the Python workers.  No MemTotal line (not Linux) gives
+    the cap."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            return f"{min(24 * 1024, int(line.split()[1]) // 2048)}m"
+    return "24g"
+
+
+def _meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as fh:
+            return fh.read()
+    except OSError:
+        return ""
+
+
 def get_spark(
     app: str = "search_engine_spark",
     master: str | None = None,
@@ -71,7 +91,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_DRIVER_MEMORY", default_driver_memory(_meminfo())))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

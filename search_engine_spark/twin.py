@@ -24,10 +24,8 @@ operation so the doubles agree bit-for-bit before the final
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from .ranking import ranked
 
 
 def raw_postings(spark: SparkSession, engine) -> DataFrame:
@@ -162,8 +160,9 @@ def twin_boosted_topk(spark: SparkSession, engine, qs: str,
         for key in engine.parse_query(t):
             boosts[key] = boosts.get(key, 0.0) + w
     scores = twin_boosted_scores(spark, engine, boosts)
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_synonym_topk(spark: SparkSession, engine, query: str,
@@ -243,8 +242,9 @@ def twin_synonym_topk(spark: SparkSession, engine, query: str,
              + F.lit(blend_b) * F.col("bonus")).alias("score"),
         )
     )
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_top_hits(spark: SparkSession, engine, query: str,
@@ -535,10 +535,9 @@ def twin_composite(spark: SparkSession, engine, query: str,
         .groupBy(*names)
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     )
-    return ranked(
-        buckets.orderBy(*[F.col(n).asc() for n in names]).limit(depth),
-        [(n, "asc") for n in names],
-    )
+    order = [F.col(n).asc() for n in names]
+    return (buckets.orderBy(*order).limit(depth)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_bm25_topk(spark: SparkSession, engine, query: str, k: int) -> DataFrame:
@@ -547,8 +546,9 @@ def twin_bm25_topk(spark: SparkSession, engine, query: str, k: int) -> DataFrame
     own pytest oracle); everything data-side is recomputed."""
     keys = engine.parse_query(query)
     scores = twin_bm25_scores(spark, engine, keys)
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_dismax_topk(spark: SparkSession, engine, query: str,
@@ -593,8 +593,9 @@ def twin_dismax_topk(spark: SparkSession, engine, query: str,
                 (F.col("mx") + F.lit(float(tie))
                  * (F.col("sm") - F.col("mx"))).alias("score"))
     )
-    topk = scored.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scored.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_matched_topk(spark: SparkSession, engine, query: str,
@@ -612,12 +613,11 @@ def twin_matched_topk(spark: SparkSession, engine, query: str,
         .groupBy("url")
         .agg(F.sort_array(F.collect_set("term_key")).alias("matched"))
     )
-    topk = (
-        scores.join(matched, "url")
-        .orderBy(F.desc("score"), F.asc("url")).limit(k)
-    )
+    order = (F.desc("score"), F.asc("url"))
     return (
-        ranked(topk, [("score", "desc"), ("url", "asc")])
+        scores.join(matched, "url")
+        .orderBy(*order).limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         .select("url", "score", "rank", "matched")
     )
 
@@ -689,8 +689,9 @@ def twin_filtered_topk(spark: SparkSession, engine, query: str,
     keys = engine.parse_query(query)
     scores = twin_bm25_scores(spark, engine, keys).join(
         allowed.select("url").distinct(), "url", "left_semi")
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_fuzzy_topk(spark: SparkSession, engine, query: str, k: int,
@@ -732,8 +733,9 @@ def twin_fuzzy_topk(spark: SparkSession, engine, query: str, k: int,
     if not corrected:
         return spark.createDataFrame([], "url string, score double, rank int")
     scores = twin_bm25_scores(spark, engine, sorted(corrected))
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_did_you_mean(spark: SparkSession, engine, query: str,
@@ -823,8 +825,9 @@ def twin_wildcard_topk(spark: SparkSession, engine, query: str, k: int,
     if not keys:
         return spark.createDataFrame([], "url string, score double, rank int")
     scores = twin_bm25_scores(spark, engine, sorted(keys))
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_wildcard_any_topk(spark: SparkSession, engine, query: str, k: int,
@@ -853,8 +856,9 @@ def twin_wildcard_any_topk(spark: SparkSession, engine, query: str, k: int,
     if not keys:
         return spark.createDataFrame([], "url string, score double, rank int")
     scores = twin_bm25_scores(spark, engine, sorted(keys))
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_regex_topk(spark: SparkSession, engine, query: str, k: int,
@@ -882,8 +886,9 @@ def twin_regex_topk(spark: SparkSession, engine, query: str, k: int,
     if not keys:
         return spark.createDataFrame([], "url string, score double, rank int")
     scores = twin_bm25_scores(spark, engine, sorted(keys))
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_sorted_topk(spark: SparkSession, engine, query: str,
@@ -904,10 +909,8 @@ def twin_sorted_topk(spark: SparkSession, engine, query: str,
         sort_keys.select("url", F.col(key_col).alias("sort_key")), "url")
     order = [F.desc("sort_key") if descending else F.asc("sort_key"),
              F.asc("url")]
-    topk = keyed.orderBy(*order).limit(k)
-    return ranked(
-        topk, [("sort_key", "desc" if descending else "asc"), ("url", "asc")]
-    ).select("url", "sort_key", "rank")
+    return (keyed.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_prf_topk(spark: SparkSession, engine, query: str, k: int,
@@ -953,8 +956,9 @@ def twin_prf_topk(spark: SparkSession, engine, query: str, k: int,
     )
     expansion = {r["term_key"] for r in top}
     scores = twin_bm25_scores(spark, engine, sorted(set(keys) | expansion))
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_boolean_topk(spark: SparkSession, engine, must: str, should: str,
@@ -1001,8 +1005,9 @@ def twin_boolean_topk(spark: SparkSession, engine, must: str, should: str,
         excl = (live.filter(F.col("term_key").isin(not_keys))
                 .select("url").distinct())
         scores = scores.join(excl, "url", "left_anti")
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_querystring_topk(spark: SparkSession, engine, qs: str, k: int,
@@ -1050,8 +1055,9 @@ def twin_querystring_topk(spark: SparkSession, engine, qs: str, k: int,
     if not keys:
         return spark.createDataFrame([], "url string, score double, rank int")
     scores = twin_bm25_scores(spark, engine, sorted(keys))
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_city_filtered_topk(spark: SparkSession, engine, query: str,
@@ -1078,12 +1084,12 @@ def twin_city_filtered_topk(spark: SparkSession, engine, query: str,
         allowed = allowed.unionByName(p)
     allowed = allowed.distinct()
     scores = twin_bm25_scores(spark, engine, engine.parse_query(query))
-    topk = (
+    order = (F.desc("score"), F.asc("url"))
+    return (
         scores.join(allowed, "url", "left_semi")
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(k)
+        .orderBy(*order).limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
 
 
 def twin_phrase_topk(spark: SparkSession, engine, phrase: str, k: int) -> DataFrame:
@@ -1113,8 +1119,9 @@ def twin_phrase_topk(spark: SparkSession, engine, phrase: str, k: int) -> DataFr
         )
         base = part if base is None else base.join(part, ["url", "base"])
     matches = base.groupBy("url").agg(F.count(F.lit(1)).cast("long").alias("phrase_tf"))
-    topk = matches.orderBy(F.desc("phrase_tf"), F.asc("url")).limit(k)
-    return ranked(topk, [("phrase_tf", "desc"), ("url", "asc")])
+    order = (F.desc("phrase_tf"), F.asc("url"))
+    return (matches.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_phrase_prefix_topk(spark: SparkSession, engine, phrase: str,
@@ -1171,8 +1178,9 @@ def twin_phrase_prefix_topk(spark: SparkSession, engine, phrase: str,
     base = exp_leg if base is None else base.join(exp_leg, ["url", "base"])
     matches = base.groupBy("url").agg(
         F.count(F.lit(1)).cast("long").alias("phrase_tf"))
-    topk = matches.orderBy(F.desc("phrase_tf"), F.asc("url")).limit(k)
-    return ranked(topk, [("phrase_tf", "desc"), ("url", "asc")])
+    order = (F.desc("phrase_tf"), F.asc("url"))
+    return (matches.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_span_near_topk(spark: SparkSession, engine, phrase: str,
@@ -1219,8 +1227,9 @@ def twin_span_near_topk(spark: SparkSession, engine, phrase: str,
         chain = chain.filter(F.greatest(*ps) - F.least(*ps) <= F.lit(max_span))
     matches = chain.groupBy("url").agg(
         F.count(F.lit(1)).cast("long").alias("span_tf"))
-    topk = matches.orderBy(F.desc("span_tf"), F.asc("url")).limit(k)
-    return ranked(topk, [("span_tf", "desc"), ("url", "asc")])
+    order = (F.desc("span_tf"), F.asc("url"))
+    return (matches.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_proximity_topk(spark: SparkSession, engine, query: str, k: int,
@@ -1257,14 +1266,11 @@ def twin_proximity_topk(spark: SparkSession, engine, query: str, k: int,
     if max_window is not None:
         mind = mind.filter(F.col("min_dist") <= max_window)
     scores = twin_bm25_scores(spark, engine, present)
-    topk = (
-        mind.join(scores, "url")
-        .orderBy(F.asc("min_dist"), F.desc("score"), F.asc("url"))
-        .limit(k)
-    )
+    order = (F.asc("min_dist"), F.desc("score"), F.asc("url"))
     return (
-        ranked(topk, [("min_dist", "asc"), ("score", "desc"), ("url", "asc")])
-        .select("url", "min_dist", "score", "rank")
+        mind.join(scores, "url")
+        .orderBy(*order).limit(k)
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
 
 
@@ -1346,8 +1352,9 @@ def twin_tree_topk(spark: SparkSession, engine, tree: dict,
         return empty
     scores = twin_bm25_scores(spark, engine, pos_keys).join(
         match, "url", "left_semi")
-    topk = scores.orderBy(F.desc("score"), F.asc("url")).limit(k)
-    return ranked(topk, [("score", "desc"), ("url", "asc")])
+    order = (F.desc("score"), F.asc("url"))
+    return (scores.orderBy(*order).limit(k)
+            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
 
 
 def twin_rescore_topk(spark: SparkSession, engine, query: str, k: int,
@@ -1358,7 +1365,11 @@ def twin_rescore_topk(spark: SparkSession, engine, query: str, k: int,
     minimum recomputed from the raw ``positions`` arrays restricted
     to the window's urls, folded with the same
     ``score + weight / (1 + min_dist)`` formula."""
-    first = twin_bm25_topk(spark, engine, query, window).select("url", "score")
+    # the window is read by both the positional semi-join and the
+    # final join below: collect it once so both see the same rows
+    first = spark.createDataFrame(
+        twin_bm25_topk(spark, engine, query, window).select("url", "score").collect(),
+        "url string, score double")
     keys = sorted(set(engine.parse_query(query)))
     live = live_raw_postings(spark, engine)
     present = sorted(
@@ -1384,6 +1395,7 @@ def twin_rescore_topk(spark: SparkSession, engine, query: str, k: int,
         out = out.join(mind, "url", "left")
     else:
         out = out.withColumn("min_dist", F.lit(None).cast("long"))
+    order = (F.desc("rescore"), F.asc("url"))
     topk = (
         out.withColumn(
             "min_dist", F.coalesce(F.col("min_dist"), F.lit(-1)).cast("long"))
@@ -1393,14 +1405,11 @@ def twin_rescore_topk(spark: SparkSession, engine, query: str, k: int,
                 F.col("min_dist") >= 0,
                 F.lit(float(weight)) / (F.lit(1.0) + F.col("min_dist")),
             ).otherwise(F.lit(0.0)))
-        .orderBy(F.desc("rescore"), F.asc("url"))
+        .orderBy(*order)
         .limit(k)
         .select("url", "min_dist", "rescore")
     )
-    return (
-        ranked(topk, [("rescore", "desc"), ("url", "asc")])
-        .select("url", "min_dist", "rescore", "rank")
-    )
+    return topk.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
 
 
 def twin_search_snippets(spark: SparkSession, engine, pages: DataFrame,

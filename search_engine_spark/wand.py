@@ -37,11 +37,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ranking import ranked
 from .codec import bm25_contribution, delta_decode, unpack_bits, varint_decode
+from .searcher import TOPK_SCHEMA
 
 WAND_OUT_SCHEMA = "shard int, local_id long, score double"
 
@@ -235,7 +235,7 @@ def wand_search(engine, query: str, k: int | None = None) -> DataFrame:
     k = k or engine.cfg.top_k
     resolved = engine.resolve_terms(engine.parse_query(query))
     if resolved.empty:
-        return engine.spark.createDataFrame([], "url string, score double, rank int")
+        return engine.spark.createDataFrame([], TOPK_SCHEMA)
     idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
     scale_by_key = dict(zip(resolved["term_key"], resolved["bound_scale"].astype(float)))
     meta = engine.meta
@@ -267,14 +267,12 @@ def wand_search(engine, query: str, k: int | None = None) -> DataFrame:
             .cogroup(deleted.groupBy("shard"))
             .applyInPandas(shard_fn_del, schema=WAND_OUT_SCHEMA)
         )
-    topk = (
-        per_shard.join(engine._doc_map(), ["shard", "local_id"])
-        .orderBy(F.desc("score"), F.asc("url"))
-        .limit(k)
-    )
+    order = (F.desc("score"), F.asc("url"))
     return (
-        ranked(topk.select("url", "score"), [("score", "desc"), ("url", "asc")])
-        .select("url", "score", "rank")
+        per_shard.join(engine._doc_map(), ["shard", "local_id"])
+        .orderBy(*order).limit(k)
+        .select("url", "score")
+        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
     )
 
 
@@ -345,8 +343,6 @@ def wand_search_batch(engine, queries: list[tuple[str, str]],
             .cogroup(deleted.groupBy("shard"))
             .applyInPandas(shard_fn_del, schema=WAND_BATCH_OUT_SCHEMA)
         )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
     return (
         per_shard.join(engine._doc_map(), ["shard", "local_id"])

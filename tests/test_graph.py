@@ -263,9 +263,8 @@ def test_anchor_index_serves_pruned(spark, tmp_path):
               .orderBy("rank").collect()]
     assert served == direct and served
 
-    scored = GR._anchor_scored(
-        GR.read_anchor_stats(spark, path, terms), terms)
-    plan = scored._jdf.queryExecution().executedPlan().toString()
+    plan = GR.anchor_search_indexed(spark, path, terms, k=5) \
+        ._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
     assert "PushedFilters" in plan and "term" in plan
 

@@ -1,4 +1,4 @@
-"""Round-3 tests: window-free post-limit ranking, packed-engine ≡
+"""Round-3 tests: the post-limit rank step, packed-engine ≡
 plain-twin equivalence rows, the max_hamming-derived SimHash candidate
 scheme, and city-tag reachability."""
 
@@ -6,10 +6,10 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators import dedup as D
-from search_engine_spark.ranking import ranked
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -17,38 +17,44 @@ SF_001 = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
-# ranking.ranked: identical to the window rank, no WindowExec node
+# rank step: row_number over the orderBy().limit(k) cut, one execution
 
-def test_ranked_matches_reference_and_has_no_window(spark):
-    df = spark.range(500).select(
+def test_rank_step_matches_reference(spark):
+    df = spark.range(500).repartition(8).select(
         (F.col("id") % 83).alias("v"), F.col("id").alias("k")
     )
-    topk = df.orderBy(F.desc("v"), F.asc("k")).limit(12)
-    # the top-k itself plans as TakeOrderedAndProject...
-    topk_plan = topk._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in topk_plan
-    out = ranked(topk, [("v", "desc"), ("k", "asc")])
-    # ...and the rank attachment adds no window (the checkpoint in
-    # ranked() truncates the lineage, so the TakeOrdered node now
-    # lives behind the materialized RDD scan)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "WindowExec" not in plan and "Window" not in plan
-    rows = sorted((r["rank"], r["v"], r["k"]) for r in out.collect())
-    want = sorted(
-        ((i % 83), i) for i in range(500)
-    )
+    order = (F.desc("v"), F.asc("k"))
+    out = df.orderBy(*order).limit(12).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)))
+    want = sorted(((i % 83), i) for i in range(500))
     want = sorted(want, key=lambda t: (-t[0], t[1]))[:12]
+    # unsorted: collect() order must already be rank order
+    rows = [(r["rank"], r["v"], r["k"]) for r in out.collect()]
     assert rows == [(i + 1, v, k) for i, (v, k) in enumerate(want)]
+    assert out.dtypes[-1] == ("rank", "int")
 
 
-def test_ranked_ties_on_nonfinal_keys(spark):
+def test_rank_step_ties_on_nonfinal_keys(spark):
     # equal primary keys must resolve by the unique tie-break
     df = spark.createDataFrame(
         [(5, "b"), (5, "a"), (3, "c")], "v long, k string"
     )
-    out = {(r["k"]): r["rank"] for r in
-           ranked(df, [("v", "desc"), ("k", "asc")]).collect()}
+    order = (F.desc("v"), F.asc("k"))
+    out = {r["k"]: r["rank"] for r in df.orderBy(*order).limit(3).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order))).collect()}
     assert out == {"a": 1, "b": 2, "c": 3}
+
+
+def test_rank_step_collect_order_is_rank_order(spark, built_index):
+    """search() rows come back in rank order, with no re-sort after
+    the window."""
+    from search_engine_spark.searcher import SearchEngine
+
+    out_dir, cfg, _ = built_index
+    rows = SearchEngine(spark, out_dir, cfg).search("world trade", 10).collect()
+    assert rows and [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
+    assert [(-r["score"], r["url"]) for r in rows] == sorted(
+        (-r["score"], r["url"]) for r in rows)
 
 
 # ---------------------------------------------------------------------------
