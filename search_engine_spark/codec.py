@@ -12,10 +12,18 @@ Layout per (term, shard) index row:
 * ``tfs``        — term frequencies, varint
 * ``lens``       — document lengths (needed by BM25 at score time), varint
 * ``imps``       — per-posting "important" flags, bitset (LSB-first)
+* ``poss``       — per-posting position lists (phrase/proximity
+                   indexes only), see :func:`encode_positions`
 * ``block_last`` — last doc id of each 128-posting block, varint-delta
                    (for skip/seek during WAND)
 * ``block_max``  — float32 upper bound of the *blended* per-term score
                    contribution in each block (block-max WAND)
+
+:func:`pack_postings` / :func:`unpack_postings` are the one-row forms.
+The query paths decode with :func:`decode_rows`, which takes a whole
+Arrow batch of index rows and decodes each column in one pass: the
+rows' blobs are concatenated and varint-decoded once, and row
+boundaries are re-imposed with the per-row counts.
 """
 
 from __future__ import annotations
@@ -129,7 +137,7 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
 def bm25_contribution(
     tfs: np.ndarray,
     lens: np.ndarray,
-    idf: float,
+    idf: float | np.ndarray,
     k1: float,
     b: float,
     avgdl: float,
@@ -137,6 +145,8 @@ def bm25_contribution(
     """Per-posting BM25 term contribution:
     ``(k1+1)*tf*idf / (tf + k1*(1-b + b*len/avgdl))``
     (constants and formula per the reference ranker, Ranker.java:32-40).
+    ``idf`` is a scalar or an array parallel to ``tfs``; either way each
+    element takes the same float operations in the same order.
     """
     tf = tfs.astype(np.float64)
     norm = tf + k1 * ((1.0 - b) + b * (lens.astype(np.float64) / avgdl))
@@ -198,3 +208,67 @@ def unpack_postings(row: dict) -> dict:
         "block_last": delta_decode(row["block_last"]),
         "block_max": np.frombuffer(row["block_max"], dtype=np.float32),
     }
+
+
+def _rebased_cumsum(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Per-row delta decode of the concatenation of several rows'
+    deltas: one cumsum, minus the running total at each row start.
+    uint64 arithmetic wraps, so the difference is exact even when the
+    batch-wide total overflows."""
+    cs = np.cumsum(deltas, dtype=np.uint64)
+    starts = np.cumsum(counts) - counts
+    base = np.zeros(counts.size, dtype=np.uint64)
+    later = starts > 0
+    base[later] = cs[starts[later] - 1]
+    return cs - np.repeat(base, counts)
+
+
+def decode_rows(
+    n,
+    doc_ids,
+    tfs=None,
+    lens=None,
+    imps=None,
+    poss=None,
+    block_last=None,
+    block_max=None,
+) -> dict[str, np.ndarray]:
+    """Batch inverse of :func:`pack_postings` over many index rows.
+
+    ``n`` is the rows' posting counts; every other argument is one blob
+    column (a sequence of bytes, one per row), and columns left None
+    are not decoded.  Returns flat arrays over the batch's postings in
+    row order — ``doc_ids``, ``tfs``, ``lens`` (uint64), ``imps``
+    (bool), ``poss`` (uint64, the rows' :func:`decode_positions`
+    streams back to back; needs ``tfs``) — plus ``n`` (int64, per
+    row).  With ``block_max``, also ``block_max`` (float32) and
+    ``block_last`` (uint64) flat over the rows' blocks, and
+    ``n_blocks`` per row.  Each array equals the concatenation of the
+    rows' :func:`unpack_postings` / :func:`decode_positions` outputs.
+
+    Positions decode as one stream because they are delta-coded per
+    posting (first value absolute), so a row boundary is a posting
+    boundary too."""
+    n = np.asarray(n, dtype=np.int64)
+    out = {"n": n, "doc_ids": _rebased_cumsum(varint_decode(b"".join(doc_ids)), n)}
+    if tfs is not None:
+        out["tfs"] = varint_decode(b"".join(tfs))
+    if lens is not None:
+        out["lens"] = varint_decode(b"".join(lens))
+    if imps is not None:
+        # row r's flags start at bit 0 of its own first byte
+        sizes = np.fromiter((len(x) for x in imps), dtype=np.int64, count=n.size)
+        bits = np.unpackbits(np.frombuffer(b"".join(imps), dtype=np.uint8),
+                             bitorder="little")
+        first_bit = 8 * (np.cumsum(sizes) - sizes) - (np.cumsum(n) - n)
+        idx = np.arange(int(n.sum()), dtype=np.int64) + np.repeat(first_bit, n)
+        out["imps"] = bits[idx].astype(bool)
+    if poss is not None:
+        out["poss"] = decode_positions(b"".join(poss), out["tfs"])
+    if block_max is not None:
+        nb = np.fromiter((len(x) // 4 for x in block_max), dtype=np.int64,
+                         count=n.size)
+        out["n_blocks"] = nb
+        out["block_max"] = np.frombuffer(b"".join(block_max), dtype=np.float32)
+        out["block_last"] = _rebased_cumsum(varint_decode(b"".join(block_last)), nb)
+    return out

@@ -22,8 +22,10 @@ distributed IDF share global term statistics across leaves).
   - global avgdl = (Σ member Σ dl) / N_g — exact BIGINT sums, the
     same value a merged build's F.avg would store
   - each member unpacks its own postings with the GLOBAL idf/avgdl
-    (searcher._unpack's override), masks its own tombstones, maps its
-    own doc ids; the per-member (url, score) frames union and one
+    (the idf map and ``avgdl`` override that ``SearchEngine._unpack``
+    takes, below the resolve step ``SearchEngine._postings`` would do
+    with member-local stats), masks its own tombstones, maps its own
+    doc ids; the per-member (url, score) frames union and one
     TakeOrderedAndProject cuts the global top-k.
 
 Result: rank-identical (scores equal to float-sum noise) to one

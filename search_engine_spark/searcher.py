@@ -7,7 +7,8 @@ Single-query and batch paths share one plan shape:
   -> index scan pruned the same way (partition dirs + parquet
      row-group stats; the Spark equivalent of the reference's
      bucket-file + line-pointer seek, Searcher.java:278-304)
-  -> Arrow unpack UDF -> per-(doc,term) contributions
+  -> Arrow unpack UDF (one codec.decode_rows pass per batch)
+     -> per-(doc,term) contributions
   -> hash agg per doc -> blended score  (R1-R3)
   -> join doc_map for urls -> deterministic top-k (R4/K4: score desc,
      url asc — quirks Q2/Q4 resolved as documented in SURVEY §2.9)
@@ -20,14 +21,14 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .codec import bm25_contribution, unpack_bits, varint_decode, delta_decode
+from .codec import bm25_contribution, decode_rows
 from .config import DEFAULT, EngineConfig
 from .indexer import IndexPaths
 from .textproc import parse_doc
@@ -38,6 +39,30 @@ UNPACKED_SCHEMA = (
 TOPK_SCHEMA = "url string, score double, rank int"  # every (url, score) top-k frame
 
 _UNSET = object()  # lazy-cache sentinel (a DataFrame must not be truth-tested)
+
+
+def idf_by_term(resolved: pd.DataFrame) -> dict[str, float]:
+    """term_key -> idf over :meth:`SearchEngine.resolve_terms` rows."""
+    return dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
+
+
+def _decode_scan(scan: DataFrame, cols: tuple[str, ...],
+                 project: Callable[[pd.DataFrame, dict], pd.DataFrame],
+                 schema: str) -> DataFrame:
+    """The index rows of ``scan`` decoded one Arrow batch at a time by
+    :func:`codec.decode_rows` (blob columns ``cols``), then shaped into
+    ``schema`` rows by ``project(batch, decoded)``.  ``decoded`` also
+    holds each posting's ``term_key`` and ``shard``."""
+
+    def unpack_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            d = decode_rows(pdf["n"], **{c: pdf[c] for c in cols})
+            d["term_key"] = np.repeat(pdf["term_key"].to_numpy(), d["n"])
+            d["shard"] = np.repeat(pdf["shard"].to_numpy(np.int32), d["n"])
+            yield project(pdf, d)
+
+    return scan.select("term_key", "shard", "n", *cols).mapInPandas(
+        unpack_batch, schema=schema)
 
 
 def split_query_string(qs: str) -> tuple[list[str], list[str], list[str],
@@ -358,6 +383,18 @@ class SearchEngine:
             F.col("bucket").isin(buckets) & F.col("term_key").isin(keys)
         )
 
+    def _postings(self, term_keys: list[str]) -> DataFrame | None:
+        """Scored, tombstone-masked per-posting rows (UNPACKED_SCHEMA)
+        of the terms that resolve — resolve, pruned scan, unpack,
+        anti-join; None when no term resolves."""
+        resolved = self.resolve_terms(term_keys)
+        return None if resolved.empty else self._resolved_postings(resolved)
+
+    def _resolved_postings(self, resolved: pd.DataFrame) -> DataFrame:
+        """:meth:`_postings` over dictionary rows already resolved."""
+        return self._drop_deleted(
+            self._unpack(self._scan_index(resolved), idf_by_term(resolved)))
+
     def _unpack(self, scan: DataFrame, idf_by_key: dict[str, float],
                 avgdl: float | None = None) -> DataFrame:
         """``avgdl`` overrides the index's own collection stat — the
@@ -367,30 +404,18 @@ class SearchEngine:
         k1, b = self.meta["k1"], self.meta["b"]
         avgdl = self.meta["avgdl"] if avgdl is None else float(avgdl)
 
-        def unpack_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    n = int(row.n)
-                    ids = delta_decode(bytes(row.doc_ids))
-                    tfs = varint_decode(bytes(row.tfs))
-                    lens = varint_decode(bytes(row.lens))
-                    imps = unpack_bits(bytes(row.imps), n)
-                    idf = idf_by_key[row.term_key]
-                    contrib = bm25_contribution(tfs, lens, idf, k1, b, avgdl)
-                    outs.append(pd.DataFrame({
-                        "term_key": np.repeat(row.term_key, n),
-                        "shard": np.repeat(np.int32(row.shard), n),
-                        "local_id": ids.astype(np.int64),
-                        "contrib": contrib,
-                        "bonus": np.where(imps, 1.2, 1.0),
-                    }))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+        def scored(pdf: pd.DataFrame, d: dict) -> pd.DataFrame:
+            idf = np.repeat(pdf["term_key"].map(idf_by_key).to_numpy(np.float64), d["n"])
+            return pd.DataFrame({
+                "term_key": d["term_key"],
+                "shard": d["shard"],
+                "local_id": d["doc_ids"].astype(np.int64),
+                "contrib": bm25_contribution(d["tfs"], d["lens"], idf, k1, b, avgdl),
+                "bonus": np.where(d["imps"], 1.2, 1.0),
+            })
 
-        return scan.select(
-            "term_key", "shard", "n", "doc_ids", "tfs", "lens", "imps"
-        ).mapInPandas(unpack_batch, schema=UNPACKED_SCHEMA)
+        return _decode_scan(scan, ("doc_ids", "tfs", "lens", "imps"), scored,
+                            UNPACKED_SCHEMA)
 
     def _unpack_tf(self, scan: DataFrame) -> DataFrame:
         """Raw per-posting rows (term_key, shard, local_id, tf, dl,
@@ -399,33 +424,20 @@ class SearchEngine:
         the BM25 saturation (synonym groups blend tf first; scoring
         per member and summing would double-saturate)."""
 
-        def unpack_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    n = int(row.n)
-                    ids = delta_decode(bytes(row.doc_ids))
-                    tfs = varint_decode(bytes(row.tfs))
-                    lens = varint_decode(bytes(row.lens))
-                    imps = unpack_bits(bytes(row.imps), n)
-                    outs.append(pd.DataFrame({
-                        "term_key": np.repeat(row.term_key, n),
-                        "shard": np.repeat(np.int32(row.shard), n),
-                        "local_id": ids.astype(np.int64),
-                        "tf": tfs.astype(np.int64),
-                        "dl": lens.astype(np.int64),
-                        "important": imps.astype(bool),
-                    }))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+        def raw(pdf: pd.DataFrame, d: dict) -> pd.DataFrame:
+            return pd.DataFrame({
+                "term_key": d["term_key"],
+                "shard": d["shard"],
+                "local_id": d["doc_ids"].astype(np.int64),
+                "tf": d["tfs"].astype(np.int64),
+                "dl": d["lens"].astype(np.int64),
+                "important": d["imps"],
+            })
 
-        return scan.select(
-            "term_key", "shard", "n", "doc_ids", "tfs", "lens", "imps"
-        ).mapInPandas(
-            unpack_batch,
-            schema="term_key string, shard int, local_id long, "
-                   "tf long, dl long, important boolean",
-        )
+        return _decode_scan(
+            scan, ("doc_ids", "tfs", "lens", "imps"), raw,
+            "term_key string, shard int, local_id long, "
+            "tf long, dl long, important boolean")
 
     def synonym_search(self, query: str, synonyms: DataFrame,
                        k: int | None = None) -> DataFrame:
@@ -482,7 +494,7 @@ class SearchEngine:
         resolved = self.resolve_terms(all_keys)
         if resolved.empty:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
+        idf_by_key = idf_by_term(resolved)
         # group idf = min member idf (= max df) over the members that
         # actually resolve; groups with no resolved member drop out
         g_idf: dict[str, float] = {}
@@ -536,10 +548,8 @@ class SearchEngine:
         (shard, local_id) rows, or None when nothing matches."""
         keys = sorted({c.lower() for c in cities if c})
         parts: list[DataFrame] = []
-        resolved = self.resolve_terms(keys)
-        if not resolved.empty:
-            idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-            members = self._unpack(self._scan_index(resolved), idf_by_key)
+        members = self._postings(keys)
+        if members is not None:
             parts.append(members.select("shard", "local_id"))
         if self.city_docs is not None and keys:
             tagged = (
@@ -568,12 +578,9 @@ class SearchEngine:
         """:meth:`search` body below the query parse — shared with
         :meth:`fuzzy_search`, which substitutes corrected keys."""
         k = k or self.cfg.top_k
-        resolved = self.resolve_terms(term_keys)
-        if resolved.empty:
+        per_posting = self._postings(term_keys)
+        if per_posting is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         if cities:
             allowed = self._city_doc_set(cities)
             if allowed is None:
@@ -619,12 +626,9 @@ class SearchEngine:
         if not (0.0 <= tie <= 1.0):
             raise ValueError("tie must be in [0, 1]")
         k = k or self.cfg.top_k
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per_posting = self._postings(self.parse_query(query))
+        if per_posting is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
         part = (F.lit(blend_a) * F.col("contrib")
                 + F.lit(blend_b) * F.col("bonus"))
@@ -664,12 +668,9 @@ class SearchEngine:
                         for key in self.parse_query(q)})
         if not pairs:
             return None
-        resolved = self.resolve_terms(sorted({k for _, k in pairs}))
-        if resolved.empty:
+        per = self._postings(sorted({k for _, k in pairs}))
+        if per is None:
             return None
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         qmap = self.spark.createDataFrame(
             [(q, k) for q, k in pairs], "qid string, term_key string")
         return (
@@ -756,13 +757,10 @@ class SearchEngine:
         state stays O(|query|)); no new scan, join, or shuffle.
         Returns (url, score, rank, matched)."""
         k = k or self.cfg.top_k
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame(
                 [], "url string, score double, rank int, matched array<string>")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
         scored = (
             per.groupBy("shard", "local_id")
@@ -790,12 +788,9 @@ class SearchEngine:
         where totalHits goes approximate (Lucene's
         TotalHits.Relation); the exact count here is the
         exhaustive-scorer contract this engine's search paths keep."""
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return 0
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         return per.select("shard", "local_id").distinct().count()
 
     def matching_urls(self, query: str) -> DataFrame:
@@ -807,12 +802,9 @@ class SearchEngine:
         call time.  Same pruned scan as :meth:`search`; the tail is
         a distinct + doc_map join, no scoring.  Stop-word-only /
         out-of-dictionary queries match nothing (F5)."""
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame([], "url string")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         return (per.select("shard", "local_id").distinct()
                 .join(self._doc_map(), ["shard", "local_id"])
                 .select("url"))
@@ -863,12 +855,10 @@ class SearchEngine:
         scan, a broadcast 1-row cursor join, a per-partition keyset
         filter, and a TakeOrderedAndProject cut of k."""
         k = k or self.cfg.top_k
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        scores = self._doc_scores(self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key)))
+        scores = self._doc_scores(per)
         cur = (
             scores.filter(F.col("url") == after_url)
             .select(F.col("score").alias("_cs"), F.col("url").alias("_cu"))
@@ -910,12 +900,9 @@ class SearchEngine:
         forced broadcast (a narrow window broadcasts under AQE, a
         90%-of-corpus filter shuffle-joins)."""
         k = k or self.cfg.top_k
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per_posting = self._postings(self.parse_query(query))
+        if per_posting is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         allowed_ids = (
             allowed.select("url").distinct()
             .join(self._doc_map(), "url")
@@ -1079,17 +1066,11 @@ class SearchEngine:
         merge, never a global sort).  Ties break url asc — total
         order, deterministic across partitionings."""
         k = k or self.cfg.top_k
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame(
                 [], "url string, sort_key long, rank int")
-        idf_by_key = dict(zip(resolved["term_key"],
-                              resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(
-                self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         keyed = urls.join(
             sort_keys.select("url", F.col(key_col).alias("sort_key")), "url")
@@ -1278,12 +1259,9 @@ class SearchEngine:
         """:meth:`boosted_search` body below the parse: the ordinary
         pruned-scan unpack with a per-term weight column applied to
         both score parts."""
-        resolved = self.resolve_terms(sorted(boosts))
-        if resolved.empty:
+        per = self._postings(sorted(boosts))
+        if per is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         wmap = F.create_map(
             *[F.lit(x) for key in sorted(boosts)
               for x in (key, float(boosts[key]))])
@@ -1312,14 +1290,11 @@ class SearchEngine:
         rank window.  The per-bucket sort is the window's — a
         pathologically hot facet value pays its own bucket's
         sort, not the corpus's; k stays out of every exchange."""
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame(
                 [], "facet string, n_docs long, bucket_rank int, "
                     "url string, score double")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
         scored = self._doc_scores(per).join(
             dims.select(F.col(url_col).alias("url"),
                         F.col(dim_col).cast("string").alias("facet"))
@@ -1433,9 +1408,7 @@ class SearchEngine:
         have = set(resolved["term_key"])
         if any(mk not in have for mk in must_keys):
             return empty()
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
+        per_posting = self._resolved_postings(resolved)
         if must_keys:
             cand = (
                 per_posting.filter(F.col("term_key").isin(must_keys))
@@ -1461,16 +1434,11 @@ class SearchEngine:
                 scand, ["shard", "local_id"], "left_semi")
         not_keys = self.parse_query(must_not) if must_not.strip() else []
         if not_keys:
-            not_resolved = self.resolve_terms(not_keys)
-            if not not_resolved.empty:
-                nidf = dict(zip(not_resolved["term_key"],
-                                not_resolved["idf"].astype(float)))
-                excl = (
-                    self._unpack(self._scan_index(not_resolved), nidf)
-                    .select("shard", "local_id").distinct()
-                )
+            excl = self._postings(not_keys)
+            if excl is not None:
                 per_posting = per_posting.join(
-                    excl, ["shard", "local_id"], "left_anti")
+                    excl.select("shard", "local_id").distinct(),
+                    ["shard", "local_id"], "left_anti")
         return self._score_topk(per_posting, k)
 
     def tree_search(self, tree: dict, k: int | None = None) -> DataFrame:
@@ -1543,9 +1511,7 @@ class SearchEngine:
         have = set(resolved["term_key"])
         if resolved.empty:
             return empty()
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
+        per_posting = self._resolved_postings(resolved)
         doc_keys = ["shard", "local_id"]
 
         def docset(node: dict):
@@ -1623,27 +1589,17 @@ class SearchEngine:
         """(term_key, shard, local_id, pos) rows from the packed
         ``poss`` blobs (one output row per occurrence)."""
 
-        def unpack_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .codec import decode_positions
+        def occurrences(pdf: pd.DataFrame, d: dict) -> pd.DataFrame:
+            tfs = d["tfs"].astype(np.int64)
+            return pd.DataFrame({
+                "term_key": np.repeat(d["term_key"], tfs),
+                "shard": np.repeat(d["shard"], tfs),
+                "local_id": np.repeat(d["doc_ids"].astype(np.int64), tfs),
+                "pos": d["poss"].astype(np.int64),
+            })
 
-            for pdf in it:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    tfs = varint_decode(bytes(row.tfs)).astype(np.int64)
-                    ids = delta_decode(bytes(row.doc_ids)).astype(np.int64)
-                    pos = decode_positions(bytes(row.poss), tfs)
-                    outs.append(pd.DataFrame({
-                        "term_key": np.repeat(row.term_key, int(tfs.sum())),
-                        "shard": np.repeat(np.int32(row.shard), int(tfs.sum())),
-                        "local_id": np.repeat(ids, tfs),
-                        "pos": pos.astype(np.int64),
-                    }))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return scan.select("term_key", "shard", "doc_ids", "tfs", "poss").mapInPandas(
-            unpack_batch, schema="term_key string, shard int, local_id long, pos long"
-        )
+        return _decode_scan(scan, ("doc_ids", "tfs", "poss"), occurrences,
+                            "term_key string, shard int, local_id long, pos long")
 
     def phrase_search(self, phrase: str, k: int | None = None) -> DataFrame:
         """Exact phrase top-k: docs containing the phrase's content
@@ -1949,29 +1905,19 @@ class SearchEngine:
         the exchange size is tf-independent; the tf(a)·tf(b) pairwise
         work happens inside a codegen expression after the join."""
 
-        def unpack_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from .codec import decode_positions
+        def posting_lists(pdf: pd.DataFrame, d: dict) -> pd.DataFrame:
+            ends = np.cumsum(d["tfs"].astype(np.int64)).tolist()
+            flat = d["poss"].astype(np.int64).tolist()
+            return pd.DataFrame({
+                "term_key": d["term_key"],
+                "shard": d["shard"],
+                "local_id": d["doc_ids"].astype(np.int64),
+                "poss": [flat[lo:hi] for lo, hi in zip([0] + ends[:-1], ends)],
+            })
 
-            for pdf in it:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    tfs = varint_decode(bytes(row.tfs)).astype(np.int64)
-                    ids = delta_decode(bytes(row.doc_ids)).astype(np.int64)
-                    pos = decode_positions(bytes(row.poss), tfs).astype(np.int64)
-                    splits = np.split(pos, np.cumsum(tfs)[:-1])
-                    outs.append(pd.DataFrame({
-                        "term_key": np.repeat(row.term_key, len(ids)),
-                        "shard": np.repeat(np.int32(row.shard), len(ids)),
-                        "local_id": ids,
-                        "poss": [s.tolist() for s in splits],
-                    }))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return scan.select("term_key", "shard", "doc_ids", "tfs", "poss").mapInPandas(
-            unpack_batch,
-            schema="term_key string, shard int, local_id long, poss array<long>",
-        )
+        return _decode_scan(
+            scan, ("doc_ids", "tfs", "poss"), posting_lists,
+            "term_key string, shard int, local_id long, poss array<long>")
 
     def proximity_search(self, query: str, k: int | None = None,
                          max_window: int | None = None) -> DataFrame:
@@ -2034,9 +1980,7 @@ class SearchEngine:
             mind = mind.filter(F.col("min_dist") <= max_window)
         # BM25-blend scores over the same resolved terms (the
         # _score_topk aggregation, without its final cut)
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
+        per_posting = self._resolved_postings(resolved)
         blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
         scores = (
             per_posting.groupBy("shard", "local_id")
@@ -2065,15 +2009,10 @@ class SearchEngine:
         unpacked once, then a 1-row broadcast semi-restriction to the
         target document's (shard, local_id) — the accepted scalar
         pattern; never a corpus pass."""
-        keys = self.parse_query(query)
-        resolved = self.resolve_terms(keys)
-        empty = self.spark.createDataFrame(
-            [], "term_key string, bm25_contrib double, bonus double, part double")
-        if resolved.empty:
-            return empty
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        per = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
+        per = self._postings(self.parse_query(query))
+        if per is None:
+            return self.spark.createDataFrame(
+                [], "term_key string, bm25_contrib double, bonus double, part double")
         target = (self._doc_map().filter(F.col("url") == url)
                   .select("shard", "local_id"))
         blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
@@ -2179,7 +2118,6 @@ class SearchEngine:
         resolved = self.resolve_terms(all_keys)
         if resolved.empty:
             return self.spark.createDataFrame([], "qid string, rank int, url string, score double")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
         matched = set(resolved["term_key"])
         # distinct (qid, term): a qid repeated across batch entries is
         # scored over the UNION of its queries' terms — duplicate rows
@@ -2188,8 +2126,7 @@ class SearchEngine:
             sorted({(qid, t) for qid, t in q_terms if t in matched}),
             "qid string, term_key string",
         )
-        per_posting = self._drop_deleted(
-            self._unpack(self._scan_index(resolved), idf_by_key))
+        per_posting = self._resolved_postings(resolved)
         blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
         scores = (
             per_posting.join(F.broadcast(qt), "term_key")
@@ -2232,17 +2169,13 @@ class SearchEngine:
         result sets pass ``approx=True`` to swap in
         ``percentile_approx`` (ES's own t-digest answer; the oracle
         rows keep the exact form)."""
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame(
                 [], "facet string, n_docs long, v_min long, v_max long, "
                     "v_sum long, v_avg double, v_sd double, p25 double, "
                     "p50 double, p75 double")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         rows = (
             cand.join(self._doc_map(), ["shard", "local_id"])
             .join(values.select(F.col(url_col).alias("url"),
@@ -2294,14 +2227,10 @@ class SearchEngine:
         register rows regardless of corpus size."""
         from .operators import sketches as SK
 
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame([(0,)], "n_values long")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         rows = (
             cand.join(self._doc_map(), ["shard", "local_id"])
             .join(values.select(F.col(url_col).alias("url"),
@@ -2334,17 +2263,13 @@ class SearchEngine:
         posting-union-sized, never the corpus; no window, no sort —
         facet counting must stream at agg speed because it runs over
         ALL matches, not the top-k."""
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return (
                 dims.select(F.col(dim_col).alias("facet")).limit(0)
                 .withColumn("n_docs", F.lit(0).cast("long"))
             )
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         pairs = (
             urls.join(
@@ -2386,15 +2311,11 @@ class SearchEngine:
                 F.col(dim_col).cast("string").alias("facet"),
             )
             labeled = part if labeled is None else labeled.unionByName(part)
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty or labeled is None:
+        per = self._postings(self.parse_query(query))
+        if per is None or labeled is None:
             return self.spark.createDataFrame(
                 [], "dim string, facet string, n_docs long")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         pairs = (
             urls.join(labeled, "url")
@@ -2457,19 +2378,15 @@ class SearchEngine:
                 raise ValueError("a range needs at least one bound")
             if frm is not None and to is not None and int(frm) >= int(to):
                 raise ValueError(f"empty range [{frm}, {to})")
-        resolved = self.resolve_terms(self.parse_query(query))
+        per = self._postings(self.parse_query(query))
         spec = self.spark.createDataFrame(
             [(i, None if frm is None else int(frm),
               None if to is None else int(to)) for i, (frm, to) in
              enumerate(ranges)],
             "band long, frm long, to long")
-        if resolved.empty:
+        if per is None:
             return spec.withColumn("n_docs", F.lit(0).cast("long"))
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         v = F.col("v")
         conds = []
@@ -2535,14 +2452,10 @@ class SearchEngine:
         against the dimension table (no forced broadcast — at web
         scale the attribute table is corpus-sized; AQE decides), then
         one count."""
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return self.spark.createDataFrame([(0,)], "n_docs long")
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         missing = urls.join(
             dims.select(F.col(url_col).alias("url")).distinct(),
@@ -2570,17 +2483,13 @@ class SearchEngine:
         everything downstream shrinks by the rate."""
         if not (0 < rate_ppm <= 1_000_000):
             raise ValueError("rate_ppm must be in (0, 1000000]")
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
+        per = self._postings(self.parse_query(query))
+        if per is None:
             return (
                 dims.select(F.col(dim_col).alias("facet")).limit(0)
                 .withColumn("n_docs", F.lit(0).cast("long"))
             )
-        idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
-        cand = (
-            self._drop_deleted(self._unpack(self._scan_index(resolved), idf_by_key))
-            .select("shard", "local_id").distinct()
-        )
+        cand = per.select("shard", "local_id").distinct()
         urls = (
             cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
             # deterministic ppm bucket from the md5's first 8 hex
@@ -2640,19 +2549,7 @@ class SearchEngine:
         if after is not None and len(after) != len(names):
             raise ValueError(
                 f"after key has {len(after)} values for {len(names)} sources")
-        resolved = self.resolve_terms(self.parse_query(query))
-        if resolved.empty:
-            cur = self.spark.createDataFrame([], "url string")
-        else:
-            idf_by_key = dict(
-                zip(resolved["term_key"], resolved["idf"].astype(float)))
-            cand = (
-                self._drop_deleted(
-                    self._unpack(self._scan_index(resolved), idf_by_key))
-                .select("shard", "local_id").distinct()
-            )
-            cur = cand.join(self._doc_map(), ["shard", "local_id"]) \
-                      .select("url")
+        cur = self.matching_urls(query)
         for spec in dims_list:
             name, dims, dim_col = spec[0], spec[1], spec[2]
             url_col = spec[3] if len(spec) > 3 else "url"

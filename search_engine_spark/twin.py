@@ -57,7 +57,9 @@ def twin_bm25_scores(spark: SparkSession, engine, term_keys: list[str]) -> DataF
     """(url, score) for the given parsed term keys, recomputed from
     postings_raw: df/idf/dl from the raw rows, BM25 contribution and
     the importance-bonus blend exactly as the packed path computes
-    them (searcher.py _unpack + search).
+    them (``SearchEngine._postings`` — the ``codec.decode_rows`` batch
+    decode plus ``codec.bm25_contribution`` — and the scoring tail of
+    ``search``).
 
     Stats-as-packed contract (Lucene collection statistics): ``df``
     counts EVERY version in the raw store — including tombstoned docs

@@ -32,16 +32,13 @@ and only k rows per shard leave the executor — no per-posting shuffle.
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .codec import bm25_contribution, delta_decode, unpack_bits, varint_decode
-from .searcher import TOPK_SCHEMA
+from .codec import bm25_contribution, decode_rows
+from .searcher import TOPK_SCHEMA, idf_by_term
 
 WAND_OUT_SCHEMA = "shard int, local_id long, score double"
 
@@ -60,16 +57,22 @@ def _decode_rows(
     """Decode every (term, segment) posting row of a shard group into
     the WAND term entries, ONCE — the expensive part (varint/delta
     decode + BM25 contribution) is query-independent, so the batched
-    scorer shares these entries across every query touching the term."""
+    scorer shares these entries across every query touching the term.
+    The whole group decodes in one :func:`codec.decode_rows` pass; each
+    entry is a slice of its flat arrays."""
+    d = decode_rows(group["n"], group["doc_ids"], tfs=group["tfs"],
+                    lens=group["lens"], imps=group["imps"],
+                    block_last=group["block_last"], block_max=group["block_max"])
+    keys = group["term_key"].tolist()
+    idf = np.repeat(np.array([idf_by_key[key] for key in keys], dtype=np.float64), d["n"])
+    contrib = bm25_contribution(d["tfs"], d["lens"], idf, k1, b, avgdl)
+    blended_all = blend_a * contrib + blend_b * np.where(d["imps"], 1.2, 1.0)
+    rows, blocks = np.cumsum(d["n"])[:-1], np.cumsum(d["n_blocks"])[:-1]
     out: list[tuple[str, dict]] = []
-    for row in group.itertuples(index=False):
-        n = int(row.n)
-        ids = delta_decode(bytes(row.doc_ids)).astype(np.int64)
-        tfs = varint_decode(bytes(row.tfs))
-        lens = varint_decode(bytes(row.lens))
-        imps = unpack_bits(bytes(row.imps), n)
-        block_last = delta_decode(bytes(row.block_last)).astype(np.int64)
-        block_max = np.frombuffer(bytes(row.block_max), dtype=np.float32).astype(np.float64)
+    for key, ids, blended, block_last, block_max in zip(
+            keys, np.split(d["doc_ids"].astype(np.int64), rows), np.split(blended_all, rows),
+            np.split(d["block_last"].astype(np.int64), blocks),
+            np.split(d["block_max"].astype(np.float64), blocks)):
         if deleted_ids is not None and deleted_ids.size:
             # tombstones (incremental.delete_documents): mask deleted
             # postings BEFORE the θ bootstrap — a deleted doc's score
@@ -80,7 +83,7 @@ def _decode_rows(
             # upper bound for the surviving postings.
             live = np.isin(ids, deleted_ids, invert=True, assume_unique=False)
             if not live.all():
-                ids, tfs, lens, imps = ids[live], tfs[live], lens[live], imps[live]
+                ids, blended = ids[live], blended[live]
                 if ids.size == 0:
                     continue
         # incremental segments: baked bounds are stale after later
@@ -88,14 +91,12 @@ def _decode_rows(
         # bound_scale re-bounds them (incremental.py).  inf (the
         # idf-was-zero case) means "never skip this term's blocks" —
         # written directly to dodge 0*inf=nan.
-        scale = (scale_by_key or {}).get(row.term_key, 1.0)
+        scale = (scale_by_key or {}).get(key, 1.0)
         if not np.isfinite(scale):
             block_max = np.full_like(block_max, np.inf)
         elif scale != 1.0:
             block_max = block_max * scale
-        contrib = bm25_contribution(tfs, lens, idf_by_key[row.term_key], k1, b, avgdl)
-        blended = blend_a * contrib + blend_b * np.where(imps, 1.2, 1.0)
-        out.append((row.term_key, {
+        out.append((key, {
             "ids": ids, "blended": blended,
             "block_last": block_last, "block_max": block_max,
             "upper": float(block_max.max()) if block_max.size else 0.0,
@@ -236,7 +237,7 @@ def wand_search(engine, query: str, k: int | None = None) -> DataFrame:
     resolved = engine.resolve_terms(engine.parse_query(query))
     if resolved.empty:
         return engine.spark.createDataFrame([], TOPK_SCHEMA)
-    idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
+    idf_by_key = idf_by_term(resolved)
     scale_by_key = dict(zip(resolved["term_key"], resolved["bound_scale"].astype(float)))
     meta = engine.meta
     k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]
@@ -313,7 +314,7 @@ def wand_search_batch(engine, queries: list[tuple[str, str]],
     qid_terms = {qid: ts for qid, ts in qid_terms.items() if ts}
     if not qid_terms:
         return empty
-    idf_by_key = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
+    idf_by_key = idf_by_term(resolved)
     scale_by_key = dict(zip(resolved["term_key"], resolved["bound_scale"].astype(float)))
     meta = engine.meta
     k1, b, avgdl = meta["k1"], meta["b"], meta["avgdl"]

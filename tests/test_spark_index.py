@@ -114,6 +114,63 @@ def test_pruned_scan_plan(spark, built_index):
     assert "PushedFilters" in explained or "term_key" in explained
 
 
+def _reference_postings(out: str, resolved, meta: dict):
+    """UNPACKED_SCHEMA rows for the resolved terms, decoded one index
+    row at a time from a pyarrow read (no Spark, no batch kernel)."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.codec import bm25_contribution, unpack_postings
+
+    idf = dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
+    rows = pq.read_table(f"{out}/index",
+                         filters=[("term_key", "in", sorted(idf))]).to_pylist()
+    parts = []
+    for row in rows:
+        u = unpack_postings(row)
+        n = int(row["n"])
+        parts.append(pd.DataFrame({
+            "term_key": [row["term_key"]] * n,
+            "shard": np.full(n, row["shard"], dtype=np.int32),
+            "local_id": u["doc_ids"].astype(np.int64),
+            "contrib": bm25_contribution(u["tfs"], u["lens"], idf[row["term_key"]],
+                                         meta["k1"], meta["b"], meta["avgdl"]),
+            "bonus": np.where(u["imps"], 1.2, 1.0),
+        }))
+    return pd.concat(parts, ignore_index=True)
+
+
+def _sorted_rows(pdf):
+    keys = ["term_key", "shard", "local_id"]
+    return pdf.sort_values(keys).reset_index(drop=True)[keys + ["contrib", "bonus"]]
+
+
+def test_postings_bit_identical_to_per_row_decode(spark, built_index):
+    """The batch-decoded, scored posting rows of a query equal a
+    one-row-at-a-time decode exactly (==, not a tolerance), and a
+    tombstone overlay removes exactly the deleted docs' rows."""
+    out, cfg, meta = built_index
+    eng = SearchEngine(spark, out, cfg)
+    keys = eng.parse_query("world trade")
+    want = _sorted_rows(_reference_postings(out, eng.resolve_terms(keys), eng.meta))
+    got = _sorted_rows(eng._postings(keys).toPandas())
+    assert len(got) == len(want) > 0
+    assert (got == want).all().all()
+    assert eng._postings(eng.parse_query("the and of")) is None
+
+    victims = [r["url"] for r in eng.search("world trade", 3).collect()]
+    gone = {(r["shard"], r["local_id"])
+            for r in eng._doc_map().filter(F.col("url").isin(victims)).collect()}
+    assert len(gone) == len(victims) == 3
+    dead = SearchEngine(spark, out, cfg, deleted_urls=victims)
+    got_dead = _sorted_rows(dead._postings(keys).toPandas())
+    hit = [(s, i) in gone for s, i in zip(want["shard"], want["local_id"])]
+    want_dead = want[[not h for h in hit]].reset_index(drop=True)
+    assert sum(hit) >= len(gone)
+    assert (got_dead == want_dead).all().all()
+
+
 def test_boolean_search_semantics(spark, built_index):
     """Lucene-BooleanQuery contract on the packed index: should-only
     ranks identically to search(); MUST results all contain every
