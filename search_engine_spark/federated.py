@@ -25,8 +25,9 @@ distributed IDF share global term statistics across leaves).
     (the idf map and ``avgdl`` override that ``SearchEngine._unpack``
     takes, below the resolve step ``SearchEngine._postings`` would do
     with member-local stats), masks its own tombstones, maps its own
-    doc ids; the per-member (url, score) frames union and one
-    TakeOrderedAndProject cuts the global top-k.
+    doc ids and scores them through its own ``_doc_scores`` tail; the
+    per-member (url, score) frames union and one ``topk`` cut
+    (TakeOrderedAndProject) ranks the global top-k.
 
 Result: rank-identical (scores equal to float-sum noise) to one
 index built over the concatenated corpus — asserted per rank by the
@@ -41,11 +42,11 @@ rows and two scalars — exactly what a distributed IDF fetch costs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DEFAULT, EngineConfig
-from .searcher import TOPK_SCHEMA, SearchEngine
+from .searcher import SearchEngine, empty, topk
 
 
 def open_members(spark: SparkSession, index_dirs: list[str],
@@ -101,12 +102,8 @@ def federated_search(spark: SparkSession, index_dirs: list[str],
     engines = engines or open_members(spark, index_dirs, cfg)
     k = k or engines[0].cfg.top_k
     keys = engines[0].parse_query(query)
-
-    def empty() -> DataFrame:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-
     if not keys:
-        return empty()
+        return empty(spark)
     n_g, avgdl_g = global_stats(engines)
     resolved = [e.resolve_terms(keys) for e in engines]
     df_g: dict[str, int] = {}
@@ -115,31 +112,15 @@ def federated_search(spark: SparkSession, index_dirs: list[str],
             df_g[t] = df_g.get(t, 0) + int(d)
     idf_g = _global_idf(spark, n_g, df_g)
     if not idf_g:
-        return empty()
-
-    blend_a = float(engines[0].meta["blend_bm25"])
-    blend_b = float(engines[0].meta["blend_bonus"])
-    parts: list[DataFrame] = []
-    for e, r in zip(engines, resolved):
-        if r.empty:
-            continue
-        idf_by_key = {t: idf_g[t] for t in r["term_key"]}
-        per = e._drop_deleted(
-            e._unpack(e._scan_index(r), idf_by_key, avgdl=avgdl_g))
-        scored = (
-            per.groupBy("shard", "local_id")
-            .agg(F.sum("contrib").alias("bm25"), F.sum("bonus").alias("bonus"))
-            .withColumn("score", F.lit(blend_a) * F.col("bm25")
-                        + F.lit(blend_b) * F.col("bonus"))
-            .join(e._doc_map(), ["shard", "local_id"])
-            .select("url", "score")
-        )
-        parts.append(scored)
-    if not parts:
-        return empty()
+        return empty(spark)
+    # every member with a resolved term: open_members checked that the
+    # members share the blend weights each _doc_scores reads
+    parts = [
+        e._doc_scores(e._drop_deleted(e._unpack(
+            e._scan_index(r), {t: idf_g[t] for t in r["term_key"]}, avgdl=avgdl_g)))
+        for e, r in zip(engines, resolved) if not r.empty
+    ]
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)
-    order = (F.desc("score"), F.asc("url"))
-    return (union.orderBy(*order).limit(k)
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
+    return topk(union, k)

@@ -1,6 +1,6 @@
 """Query engine: BM25 top-k over the packed index (SURVEY.md §3.2/3.3).
 
-Single-query and batch paths share one plan shape:
+Every BM25 top-k, single-query and batch, ends in one scoring tail:
 
   driver-side query parse (same kernels as the build)
   -> dictionary lookup pruned by (bucket, term_key) pushdown
@@ -8,10 +8,15 @@ Single-query and batch paths share one plan shape:
      row-group stats; the Spark equivalent of the reference's
      bucket-file + line-pointer seek, Searcher.java:278-304)
   -> Arrow unpack UDF (one codec.decode_rows pass per batch)
-     -> per-(doc,term) contributions
-  -> hash agg per doc -> blended score  (R1-R3)
-  -> join doc_map for urls -> deterministic top-k (R4/K4: score desc,
-     url asc — quirks Q2/Q4 resolved as documented in SURVEY §2.9)
+     -> per-(doc,term) contributions        (SearchEngine._postings)
+  -> the variant's per-posting transform (boosts, must/msm gates,
+     allowed-set semi-joins, ...)
+  -> hash agg per doc -> blended score -> join doc_map for urls
+     (R1-R3; SearchEngine._doc_scores, the one reader of the blend
+     weights through SearchEngine._blend)
+  -> deterministic top-k cut with 1-based ranks (R4/K4: score desc,
+     url asc — quirks Q2/Q4 resolved as documented in SURVEY §2.9;
+     topk, or topk_by_qid for a batch)
 
 Control crosses driver -> executors once per search call; the resolved
 term rows (a handful) ride along in UDF closures, never a shuffle.
@@ -25,7 +30,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .codec import bm25_contribution, decode_rows
@@ -37,6 +42,7 @@ UNPACKED_SCHEMA = (
     "term_key string, shard int, local_id long, contrib double, bonus double"
 )
 TOPK_SCHEMA = "url string, score double, rank int"  # every (url, score) top-k frame
+BATCH_SCHEMA = "qid string, rank int, url string, score double"  # per-qid top-k
 
 _UNSET = object()  # lazy-cache sentinel (a DataFrame must not be truth-tested)
 
@@ -44,6 +50,38 @@ _UNSET = object()  # lazy-cache sentinel (a DataFrame must not be truth-tested)
 def idf_by_term(resolved: pd.DataFrame) -> dict[str, float]:
     """term_key -> idf over :meth:`SearchEngine.resolve_terms` rows."""
     return dict(zip(resolved["term_key"], resolved["idf"].astype(float)))
+
+
+def empty(spark: SparkSession, schema: str = TOPK_SCHEMA) -> DataFrame:
+    """An empty ``schema`` frame that collects with no Spark job: the
+    zero-row limit plans as an empty local relation, where a bare
+    ``createDataFrame([])`` scans a parallelized RDD in one job."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def topk(frame: DataFrame, k: int, order: tuple[Column, ...] | None = None,
+         cols: tuple[str, ...] = ()) -> DataFrame:
+    """The first ``k`` rows of ``frame`` under the total ``order``
+    (default score desc, url asc), as ``cols`` (default every column)
+    plus a 1-based ``rank``.  orderBy+limit plans as
+    TakeOrderedAndProject (per-partition heaps, k rows total, projected
+    to ``cols``); the row_number window above it ranks only those k
+    rows, by the same order and in the same execution as the cut, so
+    no rank can disagree with the row order it is attached to."""
+    order = order or (F.desc("score"), F.asc("url"))
+    cut = frame.orderBy(*order).limit(k)
+    return (cut.select(*cols) if cols else cut).withColumn(
+        "rank", F.row_number().over(Window.orderBy(*order)))
+
+
+def topk_by_qid(frame: DataFrame, k: int) -> DataFrame:
+    """Per-query :func:`topk` of a (qid, url, score) frame as
+    (qid, rank, url, score): a window partitioned by qid ranks each
+    query's docs (score desc, url asc) — never a global sort."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
+    return (frame.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "rank", "url", "score"))
 
 
 def _decode_scan(scan: DataFrame, cols: tuple[str, ...],
@@ -489,11 +527,11 @@ class SearchEngine:
                 members |= set(self.parse_query(syn))
             groups.setdefault(keys[0], set()).update(members)
         if not groups:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         all_keys = sorted(set().union(*groups.values()))
         resolved = self.resolve_terms(all_keys)
         if resolved.empty:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         idf_by_key = idf_by_term(resolved)
         # group idf = min member idf (= max df) over the members that
         # actually resolve; groups with no resolved member drop out
@@ -506,7 +544,7 @@ class SearchEngine:
             g_idf[gid] = min(idf_by_key[m] for m in present)
             mem_rows.extend((m, gid) for m in present)
         if not mem_rows:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         mem = self.spark.createDataFrame(
             mem_rows, "term_key string, gid string")
         idf_map = F.create_map(
@@ -534,7 +572,7 @@ class SearchEngine:
             F.when(F.col("important"), F.lit(1.2)).otherwise(F.lit(1.0))
             .alias("bonus"),
         )
-        return self._score_topk(scored, k)
+        return topk(self._doc_scores(scored), k)
 
     def _doc_map(self) -> DataFrame:
         return self._doc_stats.select("shard", "local_id", "url")
@@ -580,30 +618,44 @@ class SearchEngine:
         k = k or self.cfg.top_k
         per_posting = self._postings(term_keys)
         if per_posting is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         if cities:
             allowed = self._city_doc_set(cities)
             if allowed is None:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return empty(self.spark)
             # no forced broadcast: for a common city term the allowed
             # set is O(N) docs — an unbounded explicit broadcast OOMs
             # the driver at scale.  AQE broadcasts it when it is
             # actually small and shuffle-joins otherwise.
             per_posting = per_posting.join(allowed, ["shard", "local_id"], "left_semi")
-        return self._score_topk(per_posting, k)
+        return topk(self._doc_scores(per_posting), k)
 
-    def _doc_scores(self, per_posting: DataFrame) -> DataFrame:
-        """Per-doc blended score for EVERY matching live doc — the
-        scoring tail above the cut, shared by the top-k path and the
-        keyset :meth:`search_after` path.  (url, score), unsorted."""
-        blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
-        return (
-            per_posting.groupBy("shard", "local_id")
-            .agg(F.sum("contrib").alias("bm25"), F.sum("bonus").alias("bonus"))
-            .withColumn("score", F.lit(blend_a) * F.col("bm25") + F.lit(blend_b) * F.col("bonus"))
+    def _blend(self, contrib: Column, bonus: Column) -> Column:
+        """The reference's score blend a·bm25 + b·bonus (Ranker.java):
+        the one reader of the index's blend weights."""
+        return (F.lit(self.meta["blend_bm25"]) * contrib
+                + F.lit(self.meta["blend_bonus"]) * bonus)
+
+    def _doc_scores(self, per_posting: DataFrame, by: tuple[str, ...] = (),
+                    **aggs: Column) -> DataFrame:
+        """Per-doc blended score of EVERY matching live doc — the
+        scoring tail above the cut, shared by every BM25 top-k: one
+        hash agg sums each doc's contrib and bonus, :meth:`_blend`
+        blends them, and doc_map supplies the url.  ``aggs`` (output
+        name -> aggregate) ride the same per-doc agg; ``by`` groups
+        ahead of the doc (a batch's qid, or a per-doc value joined onto
+        the postings).  Returns (url, score, *aggs), unsorted; with
+        ``by``, the joined per-doc rows, which also hold (*by, url,
+        score)."""
+        scored = (
+            per_posting.groupBy(*by, "shard", "local_id")
+            .agg(F.sum("contrib").alias("bm25"), F.sum("bonus").alias("bonus"),
+                 *[agg.alias(name) for name, agg in aggs.items()])
+            .withColumn("score", self._blend(F.col("bm25"), F.col("bonus")))
             .join(self._doc_map(), ["shard", "local_id"])
-            .select("url", "score")
         )
+        # a grouped caller projects (*by, url, score) in its own cut
+        return scored if by else scored.select("url", "score", *aggs)
 
     def dismax_search(self, query: str, k: int | None = None,
                       tie: float = 0.1) -> DataFrame:
@@ -628,12 +680,9 @@ class SearchEngine:
         k = k or self.cfg.top_k
         per_posting = self._postings(self.parse_query(query))
         if per_posting is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
-        part = (F.lit(blend_a) * F.col("contrib")
-                + F.lit(blend_b) * F.col("bonus"))
+            return empty(self.spark)
         scored = (
-            per_posting.withColumn("part", part)
+            per_posting.withColumn("part", self._blend(F.col("contrib"), F.col("bonus")))
             .groupBy("shard", "local_id")
             .agg(F.max("part").alias("mx"), F.sum("part").alias("sm"))
             .withColumn("score",
@@ -642,20 +691,7 @@ class SearchEngine:
             .join(self._doc_map(), ["shard", "local_id"])
             .select("url", "score")
         )
-        order = (F.desc("score"), F.asc("url"))
-        return (scored.orderBy(*order).limit(k)
-                .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
-
-    def _score_topk(self, per_posting: DataFrame, k: int) -> DataFrame:
-        """Shared scoring tail: per-doc BM25 + importance-bonus blend,
-        deterministic (score desc, url asc) top-k with 1-based ranks.
-        orderBy+limit plans as TakeOrderedAndProject (per-partition
-        heaps, k rows total); the row_number window above it ranks
-        only those k rows, in one execution of the cut, so no rank
-        can disagree with the row order it is attached to."""
-        order = (F.desc("score"), F.asc("url"))
-        return (self._doc_scores(per_posting).orderBy(*order).limit(k)
-                .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
+        return topk(scored, k)
 
     def _match_sets(self, queries: list[tuple[str, str]]) -> DataFrame | None:
         """(qid, shard, local_id) distinct LIVE matches per named query
@@ -730,8 +766,7 @@ class SearchEngine:
             raise ValueError("qids must be unique")
         matches = self._match_sets(queries)
         if matches is None:
-            return self.spark.createDataFrame(
-                [], "qid_a string, qid_b string, n_docs long")
+            return empty(self.spark, "qid_a string, qid_b string, n_docs long")
         a = matches.alias("a")
         b = matches.alias("b")
         pairs = a.join(
@@ -759,25 +794,10 @@ class SearchEngine:
         k = k or self.cfg.top_k
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame(
-                [], "url string, score double, rank int, matched array<string>")
-        blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
-        scored = (
-            per.groupBy("shard", "local_id")
-            .agg(F.sum("contrib").alias("bm25"),
-                 F.sum("bonus").alias("bonus"),
-                 F.sort_array(F.collect_set("term_key")).alias("matched"))
-            .withColumn("score", F.lit(blend_a) * F.col("bm25")
-                        + F.lit(blend_b) * F.col("bonus"))
-            .join(self._doc_map(), ["shard", "local_id"])
-            .select("url", "score", "matched")
-        )
-        order = (F.desc("score"), F.asc("url"))
-        return (
-            scored.orderBy(*order).limit(k)
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-            .select("url", "score", "rank", "matched")
-        )
+            return empty(self.spark, TOPK_SCHEMA + ", matched array<string>")
+        scored = self._doc_scores(
+            per, matched=F.sort_array(F.collect_set("term_key")))
+        return topk(scored, k).select("url", "score", "rank", "matched")
 
     def count_hits(self, query: str) -> int:
         """Total number of live documents matching ≥1 query term —
@@ -804,7 +824,7 @@ class SearchEngine:
         out-of-dictionary queries match nothing (F5)."""
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame([], "url string")
+            return empty(self.spark, "url string")
         return (per.select("shard", "local_id").distinct()
                 .join(self._doc_map(), ["shard", "local_id"])
                 .select("url"))
@@ -840,8 +860,8 @@ class SearchEngine:
         as the next cursor, no server-side scroll state.
 
         The cursor is the URL ALONE, never a client-echoed float
-        score: the cursor doc's score is recomputed INSIDE this job
-        (a 1-row lookup against the same scored frame), so the keyset
+        score: the cursor doc's score is recomputed INSIDE this query
+        (a scalar subquery over the same scored frame), so the keyset
         comparison happens between two numbers from one execution and
         the cross-run ±1-ulp hazard documented on :meth:`search_page`
         cannot duplicate or skip a boundary row.  A cursor url that
@@ -852,29 +872,20 @@ class SearchEngine:
         with page·k — the classic deep-paging wall (serving stacks cap
         rank-slice paging at ~10k and mandate search_after beyond).
         Here the heap is k rows at ANY depth: the same pruned posting
-        scan, a broadcast 1-row cursor join, a per-partition keyset
-        filter, and a TakeOrderedAndProject cut of k."""
+        scan, a per-partition keyset filter against the scalar cursor
+        score (no join), and a TakeOrderedAndProject cut of k."""
         k = k or self.cfg.top_k
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         scores = self._doc_scores(per)
-        cur = (
-            scores.filter(F.col("url") == after_url)
-            .select(F.col("score").alias("_cs"), F.col("url").alias("_cu"))
-        )
-        order = (F.desc("score"), F.asc("url"))
-        page = (
-            scores.crossJoin(F.broadcast(cur))  # 0- or 1-row cursor
-            .filter(
-                (F.col("score") < F.col("_cs"))
-                | ((F.col("score") == F.col("_cs")) & (F.col("url") > F.col("_cu")))
-            )
-            .select("url", "score")
-            .orderBy(*order)
-            .limit(k)
-        )
-        return page.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+        # NULL (no row passes the keyset filter) when the cursor url
+        # does not match the query
+        cur = scores.filter(F.col("url") == after_url).agg(F.max("score")).scalar()
+        page = scores.filter(
+            (F.col("score") < cur)
+            | ((F.col("score") == cur) & (F.col("url") > F.lit(after_url))))
+        return topk(page, k)
 
     def search_filtered(self, query: str, allowed: DataFrame,
                         k: int | None = None) -> DataFrame:
@@ -902,14 +913,14 @@ class SearchEngine:
         k = k or self.cfg.top_k
         per_posting = self._postings(self.parse_query(query))
         if per_posting is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         allowed_ids = (
             allowed.select("url").distinct()
             .join(self._doc_map(), "url")
             .select("shard", "local_id")
         )
         per_posting = per_posting.join(allowed_ids, ["shard", "local_id"], "left_semi")
-        return self._score_topk(per_posting, k)
+        return topk(self._doc_scores(per_posting), k)
 
     def fuzzy_search(self, query: str, k: int | None = None,
                      max_dist: int = 2,
@@ -952,8 +963,6 @@ class SearchEngine:
             # <= |query terms| rows — the same driver-side footprint
             # as resolve_terms
             corrected |= {r.suggestion for r in sugg.collect()}
-        if not corrected:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(corrected), k)
 
     def did_you_mean(self, query: str, max_dist: int = 2,
@@ -992,8 +1001,6 @@ class SearchEngine:
         rows = self.did_you_mean(query, max_dist=max_dist,
                                  gain=gain).collect()
         keys = sorted({r["suggestion"] for r in rows})
-        if not keys:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(keys, k)
 
     def wildcard_search(self, query: str, k: int | None = None,
@@ -1025,8 +1032,6 @@ class SearchEngine:
         plain = " ".join(p for p in parts if not p.endswith("*"))
         keys = set(self.parse_query(plain)) if plain.strip() else set()
         keys |= set(self._expand_prefixes(prefixes, max_expansions))
-        if not keys:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def _expand_prefixes(self, prefixes: list[str],
@@ -1068,16 +1073,13 @@ class SearchEngine:
         k = k or self.cfg.top_k
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame(
-                [], "url string, sort_key long, rank int")
+            return empty(self.spark, "url string, sort_key long, rank int")
         cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         keyed = urls.join(
             sort_keys.select("url", F.col(key_col).alias("sort_key")), "url")
-        order = [F.desc("sort_key") if descending else F.asc("sort_key"),
-                 F.asc("url")]
-        return (keyed.orderBy(*order).limit(k)
-                .withColumn("rank", F.row_number().over(Window.orderBy(*order))))
+        return topk(keyed, k, (F.desc("sort_key") if descending
+                               else F.asc("sort_key"), F.asc("url")))
 
     def wildcard_search_indexed(self, query: str, kgram_path: str,
                                 k: int | None = None,
@@ -1104,8 +1106,6 @@ class SearchEngine:
             exp = KG.expand_wildcard_indexed(
                 self.spark, kgram_path, patterns, max_expansions)
             keys |= {r.term for r in exp.select("term").distinct().collect()}
-        if not keys:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     @staticmethod
@@ -1148,8 +1148,6 @@ class SearchEngine:
             exp = expand_regex(self._dictionary, patterns, max_expansions,
                                term_col="term_key", df_col="df")
             keys |= {r.term for r in exp.select("term").distinct().collect()}
-        if not keys:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def regex_search_indexed(self, query: str, kgram_path: str,
@@ -1172,8 +1170,6 @@ class SearchEngine:
             exp = KG.expand_regex_indexed(
                 self.spark, kgram_path, patterns, max_expansions)
             keys |= {r.term for r in exp.select("term").distinct().collect()}
-        if not keys:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def query_string_search(self, qs: str, k: int | None = None,
@@ -1218,8 +1214,6 @@ class SearchEngine:
                 extra_should_keys=wild_keys)
         keys = set(self.parse_query(" ".join(should))) if should else set()
         keys |= set(wild_keys)
-        if not keys:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return self._search_keys(sorted(keys), k)
 
     def boosted_search(self, qs: str, k: int | None = None) -> DataFrame:
@@ -1261,7 +1255,7 @@ class SearchEngine:
         both score parts."""
         per = self._postings(sorted(boosts))
         if per is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         wmap = F.create_map(
             *[F.lit(x) for key in sorted(boosts)
               for x in (key, float(boosts[key]))])
@@ -1271,7 +1265,7 @@ class SearchEngine:
             .withColumn("bonus", F.col("bonus") * F.col("_w"))
             .drop("_w")
         )
-        return self._score_topk(per, k)
+        return topk(self._doc_scores(per), k)
 
     def search_top_hits(self, query: str, dims: DataFrame, dim_col: str,
                         k_per_bucket: int = 3,
@@ -1292,9 +1286,8 @@ class SearchEngine:
         sort, not the corpus's; k stays out of every exchange."""
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame(
-                [], "facet string, n_docs long, bucket_rank int, "
-                    "url string, score double")
+            return empty(self.spark, "facet string, n_docs long, bucket_rank int, "
+                                     "url string, score double")
         scored = self._doc_scores(per).join(
             dims.select(F.col(url_col).alias("url"),
                         F.col(dim_col).cast("string").alias("facet"))
@@ -1341,7 +1334,7 @@ class SearchEngine:
             r["url"] for r in self.search(query, fb_docs).select("url").collect()
         ]
         if not fb_urls:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return empty(self.spark)
         tv = fetch_term_vectors(self.spark, tv_path, fb_urls)
         cand = tv.groupBy("term_key").agg(F.sum("tf").alias("tf_sum"))
         if keys:
@@ -1390,10 +1383,6 @@ class SearchEngine:
         anti-joins on (shard, local_id).  No clause ever touches
         non-matching documents."""
         k = k or self.cfg.top_k
-
-        def empty() -> DataFrame:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-
         must_keys = self.parse_query(must) if must.strip() else []
         should_keys = self.parse_query(should) if should.strip() else []
         # pre-parsed SHOULD keys (the query-string path's wildcard
@@ -1401,13 +1390,13 @@ class SearchEngine:
         should_keys = sorted(set(should_keys) | set(extra_should_keys or []))
         score_keys = sorted(set(must_keys) | set(should_keys))
         if not score_keys:
-            return empty()
+            return empty(self.spark)
         resolved = self.resolve_terms(score_keys)
         if resolved.empty:
-            return empty()
+            return empty(self.spark)
         have = set(resolved["term_key"])
         if any(mk not in have for mk in must_keys):
-            return empty()
+            return empty(self.spark)
         per_posting = self._resolved_postings(resolved)
         if must_keys:
             cand = (
@@ -1420,7 +1409,7 @@ class SearchEngine:
             per_posting = per_posting.join(cand, ["shard", "local_id"], "left_semi")
         if min_should_match > 0:
             if len(should_keys) < min_should_match:
-                return empty()
+                return empty(self.spark)
             # same shape as the MUST gate: one countDistinct agg over
             # the already-unpacked should rows — no second index scan
             scand = (
@@ -1439,7 +1428,7 @@ class SearchEngine:
                 per_posting = per_posting.join(
                     excl.select("shard", "local_id").distinct(),
                     ["shard", "local_id"], "left_anti")
-        return self._score_topk(per_posting, k)
+        return topk(self._doc_scores(per_posting), k)
 
     def tree_search(self, tree: dict, k: int | None = None) -> DataFrame:
         """Nested boolean query trees — the full Lucene BooleanQuery
@@ -1471,10 +1460,6 @@ class SearchEngine:
         never extra index scans; no clause touches non-matching
         documents."""
         k = k or self.cfg.top_k
-
-        def empty() -> DataFrame:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-
         # walk: collect leaf keys + score polarity, validate shape
         leaves: list[tuple[str, bool]] = []
 
@@ -1506,11 +1491,11 @@ class SearchEngine:
         collect(tree, True)
         all_keys = sorted({key for key, _pos in leaves if key})
         if not all_keys:
-            return empty()
+            return empty(self.spark)
         resolved = self.resolve_terms(all_keys)
         have = set(resolved["term_key"])
         if resolved.empty:
-            return empty()
+            return empty(self.spark)
         per_posting = self._resolved_postings(resolved)
         doc_keys = ["shard", "local_id"]
 
@@ -1553,15 +1538,15 @@ class SearchEngine:
 
         match = docset(tree)
         if match is None:
-            return empty()
+            return empty(self.spark)
         pos_keys = sorted({key for key, p in leaves if p and key and key in have})
         if not pos_keys:
-            return empty()
+            return empty(self.spark)
         scoring = (
             per_posting.filter(F.col("term_key").isin(pos_keys))
             .join(match, doc_keys, "left_semi")
         )
-        return self._score_topk(scoring, k)
+        return topk(self._doc_scores(scoring), k)
 
     # -- phrase search (positions path; requires keep_positions build) -------
     def parse_phrase(self, phrase: str) -> list[tuple[str, int]]:
@@ -1614,42 +1599,47 @@ class SearchEngine:
             raise ValueError("phrase_search requires an index built with keep_positions=True")
         k = k or self.cfg.top_k
         terms = self.parse_phrase(phrase)
-        empty = self.spark.createDataFrame([], "url string, phrase_tf long, rank int")
-        if not terms:
-            return empty
         keys = sorted({t for t, _ in terms})
         resolved = self.resolve_terms(keys)
-        if set(resolved["term_key"]) != set(keys):
-            return empty  # a phrase term missing from the dictionary
-        # one PRUNED scan+unpack per phrase term: the term filter
-        # reaches each branch's parquet scan (bucket dir + row-group
-        # stats), so no branch decodes another term's positions — a
-        # single shared unpack feeding n filter branches would re-run
-        # the decode kernel once per branch (no CSE across
-        # mapInPandas) over every term's blob
-        base = None
-        for key, off in terms:
+        chain = None
+        if terms and set(resolved["term_key"]) == set(keys):  # all in the dictionary
+            chain = self._phrase_chain(
+                [(resolved[resolved["term_key"] == key], off) for key, off in terms])
+        return self._count_topk(chain, "phrase_tf", k)
+
+    def _phrase_chain(self, legs: list[tuple[pd.DataFrame, int]]) -> DataFrame:
+        """(shard, local_id, base) rows — one per way each doc holds
+        every leg's term at raw position ``base + offset``.  ``legs``
+        are (dictionary rows, offset) pairs, chained by an n-way
+        co-partitioned join on (shard, local_id, base): each join keys
+        on the same columns, so Spark reuses one exchange per side and
+        no all-pairs work happens.  One PRUNED scan+unpack per leg: the
+        term filter reaches each branch's parquet scan (bucket dir +
+        row-group stats), so no branch decodes another term's
+        positions — a single shared unpack feeding n filter branches
+        would re-run the decode kernel once per branch (no CSE across
+        mapInPandas) over every term's blob."""
+        chain = None
+        for rows, off in legs:
             part = (
-                self._unpack_positions(
-                    self._scan_index(resolved[resolved["term_key"] == key])
-                )
+                self._unpack_positions(self._scan_index(rows))
                 .select("shard", "local_id", (F.col("pos") - F.lit(off)).alias("base"))
             )
-            base = part if base is None else base.join(
-                part, ["shard", "local_id", "base"]
-            )
-        matches = self._drop_deleted(
-            base.groupBy("shard", "local_id").agg(
-                F.count(F.lit(1)).alias("phrase_tf")
-            )
-        )
-        order = (F.desc("phrase_tf"), F.asc("url"))
-        return (
-            matches.join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(*order).limit(k)
-            .select("url", "phrase_tf")
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        )
+            chain = part if chain is None else chain.join(
+                part, ["shard", "local_id", "base"])
+        return chain
+
+    def _count_topk(self, rows: DataFrame | None, col: str, k: int) -> DataFrame:
+        """(url, ``col``, rank): the live docs of the (shard,
+        local_id)-keyed ``rows``, each counted into ``col``, cut to the
+        top ``k`` by (``col`` desc, url asc) — the positional paths'
+        tail.  ``rows`` None (nothing can match) gives the empty frame."""
+        if rows is None:
+            return empty(self.spark, f"url string, {col} long, rank int")
+        counts = self._drop_deleted(
+            rows.groupBy("shard", "local_id").agg(F.count(F.lit(1)).alias(col)))
+        return topk(counts.join(self._doc_map(), ["shard", "local_id"]), k,
+                    (F.desc(col), F.asc("url")), ("url", col))
 
     def phrase_prefix_search(self, phrase: str, k: int | None = None,
                              max_expansions: int = 16) -> DataFrame:
@@ -1670,8 +1660,6 @@ class SearchEngine:
                 "keep_positions=True")
         k = k or self.cfg.top_k
         toks = phrase.split()
-        empty = self.spark.createDataFrame(
-            [], "url string, phrase_tf long, rank int")
         if not toks or not toks[-1].endswith("*") or len(toks[-1]) < 2:
             raise ValueError(
                 "phrase_prefix_search wants 'head terms pre*' — a "
@@ -1681,42 +1669,15 @@ class SearchEngine:
         head = " ".join(toks[:-1])
         terms = self.parse_phrase(head) if head else []
         expansions = self._expand_prefixes([prefix], max_expansions)
-        if not expansions:
-            return empty
-        keys = sorted({t for t, _ in terms})
-        resolved = self.resolve_terms(sorted(set(keys) | set(expansions)))
-        if set(keys) - set(resolved["term_key"]):
-            return empty  # a head term missing from the dictionary
-        base = None
-        for key, off in terms:
-            part = (
-                self._unpack_positions(
-                    self._scan_index(resolved[resolved["term_key"] == key])
-                )
-                .select("shard", "local_id",
-                        (F.col("pos") - F.lit(off)).alias("base"))
-            )
-            base = part if base is None else base.join(
-                part, ["shard", "local_id", "base"])
-        exp_rows = resolved[resolved["term_key"].isin(expansions)]
-        exp_leg = (
-            self._unpack_positions(self._scan_index(exp_rows))
-            .select("shard", "local_id",
-                    (F.col("pos") - F.lit(prefix_off)).alias("base"))
-        )
-        base = exp_leg if base is None else base.join(
-            exp_leg, ["shard", "local_id", "base"])
-        matches = self._drop_deleted(
-            base.groupBy("shard", "local_id").agg(
-                F.count(F.lit(1)).alias("phrase_tf"))
-        )
-        order = (F.desc("phrase_tf"), F.asc("url"))
-        return (
-            matches.join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(*order).limit(k)
-            .select("url", "phrase_tf")
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        )
+        chain = None
+        if expansions:
+            keys = sorted({t for t, _ in terms})
+            resolved = self.resolve_terms(sorted(set(keys) | set(expansions)))
+            if not set(keys) - set(resolved["term_key"]):  # head all in the dictionary
+                chain = self._phrase_chain(
+                    [(resolved[resolved["term_key"] == key], off) for key, off in terms]
+                    + [(resolved[resolved["term_key"].isin(expansions)], prefix_off)])
+        return self._count_topk(chain, "phrase_tf", k)
 
     def span_near_search(self, phrase: str, slop: int = 0,
                          k: int | None = None,
@@ -1756,17 +1717,13 @@ class SearchEngine:
             raise ValueError(f"slop must be >= 0, got {slop}")
         k = k or self.cfg.top_k
         terms = self.parse_phrase(phrase)
-        empty = self.spark.createDataFrame(
-            [], "url string, span_tf long, rank int")
-        if not terms:
-            return empty
         if not ordered and len({t for t, _ in terms}) != len(terms):
             raise ValueError(
                 "unordered span-near requires pairwise-distinct phrase terms")
         keys = sorted({t for t, _ in terms})
         resolved = self.resolve_terms(keys)
-        if set(resolved["term_key"]) != set(keys):
-            return empty  # a phrase term missing from the dictionary
+        if not terms or set(resolved["term_key"]) != set(keys):
+            return self._count_topk(None, "span_tf", k)  # a term not in the dictionary
         max_span = (terms[-1][1] - terms[0][1]) + slop
         chain = None
         for i, (key, _off) in enumerate(terms):
@@ -1792,17 +1749,7 @@ class SearchEngine:
             ps = [F.col(f"p{i}") for i in range(len(terms))]
             chain = chain.filter(
                 F.greatest(*ps) - F.least(*ps) <= F.lit(max_span))
-        matches = self._drop_deleted(
-            chain.groupBy("shard", "local_id").agg(
-                F.count(F.lit(1)).alias("span_tf"))
-        )
-        order = (F.desc("span_tf"), F.asc("url"))
-        return (
-            matches.join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(*order).limit(k)
-            .select("url", "span_tf")
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-        )
+        return self._count_topk(chain, "span_tf", k)
 
     def rescore_search(self, query: str, k: int | None = None,
                        window: int = 50, weight: float = 2.0) -> DataFrame:
@@ -1833,55 +1780,26 @@ class SearchEngine:
         k = k or self.cfg.top_k
         if window < k:
             raise ValueError(f"window ({window}) must be >= k ({k})")
-        empty = self.spark.createDataFrame(
-            [], "url string, min_dist long, rescore double, rank int")
         # the window is read by both the positional semi-join and the
         # final join below: collect it once so both see the same rows
         first = self.search(query, window).collect()
         if not first:
-            return empty
+            return empty(self.spark, "url string, min_dist long, rescore double, rank int")
         cand = (
             self.spark.createDataFrame(first, TOPK_SCHEMA)
             .select("url", "score")
             .join(self._doc_map(), "url")
             .select("shard", "local_id", "url", "score")
         )
-        keys = sorted(set(self.parse_query(query)))
-        resolved = self.resolve_terms(keys)
-        mind = None
-        if len(resolved) >= 2:
-            pos = None
-            for key in sorted(resolved["term_key"]):
-                part = self._unpack_position_arrays(
-                    self._scan_index(resolved[resolved["term_key"] == key]))
-                pos = part if pos is None else pos.unionByName(part)
-            pos = pos.join(cand.select("shard", "local_id"),
-                           ["shard", "local_id"], "left_semi")
-            a = pos.select("shard", "local_id",
-                           F.col("term_key").alias("ta"),
-                           F.col("poss").alias("pa"))
-            b = pos.select("shard", "local_id",
-                           F.col("term_key").alias("tb"),
-                           F.col("poss").alias("pb"))
-            pair_min = F.expr(
-                "aggregate(pa, CAST(4611686018427387904 AS BIGINT),"
-                " (acc, x) -> least(acc, aggregate(pb,"
-                " CAST(4611686018427387904 AS BIGINT),"
-                " (acc2, y) -> least(acc2, abs(x - y)))))"
-            )
-            mind = (
-                a.join(b, ["shard", "local_id"])
-                .filter(F.col("ta") < F.col("tb"))
-                .select("shard", "local_id", pair_min.alias("pair_min"))
-                .groupBy("shard", "local_id")
-                .agg(F.min("pair_min").cast("long").alias("min_dist"))
-            )
+        resolved = self.resolve_terms(sorted(set(self.parse_query(query))))
         out = cand
-        if mind is not None:
+        if len(resolved) >= 2:
+            live = cand.select("shard", "local_id")
+            mind = self._min_pair_dist(
+                resolved, lambda pos: pos.join(live, ["shard", "local_id"], "left_semi"))
             out = out.join(mind, ["shard", "local_id"], "left")
         else:
             out = out.withColumn("min_dist", F.lit(None).cast("long"))
-        order = (F.desc("rescore"), F.asc("url"))
         out = (
             out.withColumn(
                 "min_dist",
@@ -1892,11 +1810,8 @@ class SearchEngine:
                     F.col("min_dist") >= 0,
                     F.lit(float(weight)) / (F.lit(1.0) + F.col("min_dist")),
                 ).otherwise(F.lit(0.0)))
-            .orderBy(*order)
-            .limit(k)
-            .select("url", "min_dist", "rescore")
         )
-        return out.withColumn("rank", F.row_number().over(Window.orderBy(*order)))
+        return topk(out, k, (F.desc("rescore"), F.asc("url")), ("url", "min_dist", "rescore"))
 
     def _unpack_position_arrays(self, scan: DataFrame) -> DataFrame:
         """(term_key, shard, local_id, poss) — one row per POSTING
@@ -1944,57 +1859,51 @@ class SearchEngine:
             raise ValueError(
                 "proximity_search requires an index built with keep_positions=True")
         k = k or self.cfg.top_k
-        keys = sorted(set(self.parse_query(query)))
-        empty = self.spark.createDataFrame(
-            [], "url string, min_dist long, score double, rank int")
-        resolved = self.resolve_terms(keys)
-        if len(resolved) < 2:
-            return empty  # proximity needs two distinct matchable terms
-        # position arrays, one pruned unpack per resolved term
+        resolved = self.resolve_terms(sorted(set(self.parse_query(query))))
+        if len(resolved) < 2:  # proximity needs two distinct matchable terms
+            return empty(self.spark, "url string, min_dist long, score double, rank int")
+        mind = self._min_pair_dist(resolved, self._drop_deleted)
+        if max_window is not None:
+            mind = mind.filter(F.col("min_dist") <= max_window)
+        # the BM25-blend tail over the same resolved terms; min_dist is
+        # one value per doc, so grouping by it keeps one row per doc
+        per_posting = self._resolved_postings(resolved).join(mind, ["shard", "local_id"])
+        return topk(self._doc_scores(per_posting, by=("min_dist",)), k,
+                    (F.asc("min_dist"), F.desc("score"), F.asc("url")),
+                    ("url", "min_dist", "score"))
+
+    def _min_pair_dist(self, resolved: pd.DataFrame,
+                       restrict: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        """(shard, local_id, min_dist): the smallest token distance
+        between two DISTINCT resolved terms, for each doc holding at
+        least two of them.  Position arrays come from one pruned
+        unpack per term; ``restrict`` narrows them (the tombstone
+        anti-join, or a candidate semi-join) before the pairwise
+        self-equi-join on the doc key.  The strict term order halves
+        the pairs and removes self-pairs; the tf(a)·tf(b) scan runs
+        inside a nested codegen ``aggregate``."""
         pos = None
         for key in sorted(resolved["term_key"]):
             part = self._unpack_position_arrays(
                 self._scan_index(resolved[resolved["term_key"] == key]))
             pos = part if pos is None else pos.unionByName(part)
-        pos = self._drop_deleted(pos)
+        pos = restrict(pos)
         a = pos.select("shard", "local_id",
                        F.col("term_key").alias("ta"), F.col("poss").alias("pa"))
         b = pos.select("shard", "local_id",
                        F.col("term_key").alias("tb"), F.col("poss").alias("pb"))
-        # equi-join on the doc key; the strict term order halves the
-        # pairs and removes self-pairs
         pair_min = F.expr(
             "aggregate(pa, CAST(4611686018427387904 AS BIGINT),"
             " (acc, x) -> least(acc, aggregate(pb,"
             " CAST(4611686018427387904 AS BIGINT),"
             " (acc2, y) -> least(acc2, abs(x - y)))))"
         )
-        mind = (
+        return (
             a.join(b, ["shard", "local_id"])
             .filter(F.col("ta") < F.col("tb"))
             .select("shard", "local_id", pair_min.alias("pair_min"))
             .groupBy("shard", "local_id")
             .agg(F.min("pair_min").cast("long").alias("min_dist"))
-        )
-        if max_window is not None:
-            mind = mind.filter(F.col("min_dist") <= max_window)
-        # BM25-blend scores over the same resolved terms (the
-        # _score_topk aggregation, without its final cut)
-        per_posting = self._resolved_postings(resolved)
-        blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
-        scores = (
-            per_posting.groupBy("shard", "local_id")
-            .agg(F.sum("contrib").alias("bm25"), F.sum("bonus").alias("bonus"))
-            .withColumn("score", F.lit(blend_a) * F.col("bm25")
-                        + F.lit(blend_b) * F.col("bonus"))
-        )
-        order = (F.asc("min_dist"), F.desc("score"), F.asc("url"))
-        return (
-            mind.join(scores, ["shard", "local_id"])
-            .join(self._doc_map(), ["shard", "local_id"])
-            .orderBy(*order).limit(k)
-            .select("url", "min_dist", "score")
-            .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
         )
 
     def explain_score(self, query: str, url: str) -> DataFrame:
@@ -2011,19 +1920,17 @@ class SearchEngine:
         pattern; never a corpus pass."""
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame(
-                [], "term_key string, bm25_contrib double, bonus double, part double")
+            return empty(self.spark,
+                         "term_key string, bm25_contrib double, bonus double, part double")
         target = (self._doc_map().filter(F.col("url") == url)
                   .select("shard", "local_id"))
-        blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
         return (
             per.join(F.broadcast(target), ["shard", "local_id"])
             .select(
                 "term_key",
                 F.col("contrib").alias("bm25_contrib"),
                 "bonus",
-                (F.lit(blend_a) * F.col("contrib")
-                 + F.lit(blend_b) * F.col("bonus")).alias("part"),
+                self._blend(F.col("contrib"), F.col("bonus")).alias("part"),
             )
         )
 
@@ -2054,10 +1961,8 @@ class SearchEngine:
                 "keep_positions=True")
         k = k or self.cfg.top_k
         rows = self.search(query, k).collect()  # k rows: the serving cut
-        empty = self.spark.createDataFrame(
-            [], "url string, score double, rank int, match_pos long, snippet string")
         if not rows:
-            return empty
+            return empty(self.spark, TOPK_SCHEMA + ", match_pos long, snippet string")
         run = self.spark.createDataFrame(rows, TOPK_SCHEMA)
         urls = [r["url"] for r in rows]
         resolved = self.resolve_terms(self.parse_query(query))
@@ -2113,11 +2018,11 @@ class SearchEngine:
             for t in self.parse_query(q):
                 q_terms.append((qid, t))
         if not q_terms:
-            return self.spark.createDataFrame([], "qid string, rank int, url string, score double")
+            return empty(self.spark, BATCH_SCHEMA)
         all_keys = sorted({t for _, t in q_terms})
         resolved = self.resolve_terms(all_keys)
         if resolved.empty:
-            return self.spark.createDataFrame([], "qid string, rank int, url string, score double")
+            return empty(self.spark, BATCH_SCHEMA)
         matched = set(resolved["term_key"])
         # distinct (qid, term): a qid repeated across batch entries is
         # scored over the UNION of its queries' terms — duplicate rows
@@ -2126,21 +2031,8 @@ class SearchEngine:
             sorted({(qid, t) for qid, t in q_terms if t in matched}),
             "qid string, term_key string",
         )
-        per_posting = self._resolved_postings(resolved)
-        blend_a, blend_b = self.meta["blend_bm25"], self.meta["blend_bonus"]
-        scores = (
-            per_posting.join(F.broadcast(qt), "term_key")
-            .groupBy("qid", "shard", "local_id")
-            .agg(F.sum("contrib").alias("bm25"), F.sum("bonus").alias("bonus"))
-            .withColumn("score", F.lit(blend_a) * F.col("bm25") + F.lit(blend_b) * F.col("bonus"))
-            .join(self._doc_map(), ["shard", "local_id"])
-        )
-        w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-        return (
-            scores.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "rank", "url", "score")
-        )
+        per_posting = self._resolved_postings(resolved).join(F.broadcast(qt), "term_key")
+        return topk_by_qid(self._doc_scores(per_posting, by=("qid",)), k)
 
     def search_extended_stats(self, query: str, values: DataFrame,
                               dim_col: str, value_col: str,
@@ -2171,10 +2063,10 @@ class SearchEngine:
         rows keep the exact form)."""
         per = self._postings(self.parse_query(query))
         if per is None:
-            return self.spark.createDataFrame(
-                [], "facet string, n_docs long, v_min long, v_max long, "
-                    "v_sum long, v_avg double, v_sd double, p25 double, "
-                    "p50 double, p75 double")
+            return empty(self.spark,
+                         "facet string, n_docs long, v_min long, v_max long, "
+                         "v_sum long, v_avg double, v_sd double, p25 double, "
+                         "p50 double, p75 double")
         cand = per.select("shard", "local_id").distinct()
         rows = (
             cand.join(self._doc_map(), ["shard", "local_id"])
@@ -2313,8 +2205,7 @@ class SearchEngine:
             labeled = part if labeled is None else labeled.unionByName(part)
         per = self._postings(self.parse_query(query))
         if per is None or labeled is None:
-            return self.spark.createDataFrame(
-                [], "dim string, facet string, n_docs long")
+            return empty(self.spark, "dim string, facet string, n_docs long")
         cand = per.select("shard", "local_id").distinct()
         urls = cand.join(self._doc_map(), ["shard", "local_id"]).select("url")
         pairs = (

@@ -34,11 +34,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from .codec import bm25_contribution, decode_rows
-from .searcher import TOPK_SCHEMA, idf_by_term
+from .searcher import BATCH_SCHEMA, empty, idf_by_term, topk, topk_by_qid
 
 WAND_OUT_SCHEMA = "shard int, local_id long, score double"
 
@@ -236,7 +235,7 @@ def wand_search(engine, query: str, k: int | None = None) -> DataFrame:
     k = k or engine.cfg.top_k
     resolved = engine.resolve_terms(engine.parse_query(query))
     if resolved.empty:
-        return engine.spark.createDataFrame([], TOPK_SCHEMA)
+        return empty(engine.spark)
     idf_by_key = idf_by_term(resolved)
     scale_by_key = dict(zip(resolved["term_key"], resolved["bound_scale"].astype(float)))
     meta = engine.meta
@@ -268,13 +267,8 @@ def wand_search(engine, query: str, k: int | None = None) -> DataFrame:
             .cogroup(deleted.groupBy("shard"))
             .applyInPandas(shard_fn_del, schema=WAND_OUT_SCHEMA)
         )
-    order = (F.desc("score"), F.asc("url"))
-    return (
-        per_shard.join(engine._doc_map(), ["shard", "local_id"])
-        .orderBy(*order).limit(k)
-        .select("url", "score")
-        .withColumn("rank", F.row_number().over(Window.orderBy(*order)))
-    )
+    return topk(per_shard.join(engine._doc_map(), ["shard", "local_id"]), k,
+                cols=("url", "score"))
 
 
 WAND_BATCH_OUT_SCHEMA = "qid string, shard int, local_id long, score double"
@@ -300,20 +294,13 @@ def wand_search_batch(engine, queries: list[tuple[str, str]],
     raw: dict[str, list[str]] = {}
     for qid, q in queries:
         raw.setdefault(qid, []).extend(engine.parse_query(q))
-    all_keys = sorted({t for ts in raw.values() for t in ts})
-    empty = engine.spark.createDataFrame(
-        [], "qid string, rank int, url string, score double")
-    if not all_keys:
-        return empty
-    resolved = engine.resolve_terms(all_keys)
-    if resolved.empty:
-        return empty
+    resolved = engine.resolve_terms(sorted({t for ts in raw.values() for t in ts}))
     matched = set(resolved["term_key"])
     qid_terms = {qid: sorted({t for t in ts if t in matched})
                  for qid, ts in raw.items()}
     qid_terms = {qid: ts for qid, ts in qid_terms.items() if ts}
     if not qid_terms:
-        return empty
+        return empty(engine.spark, BATCH_SCHEMA)
     idf_by_key = idf_by_term(resolved)
     scale_by_key = dict(zip(resolved["term_key"], resolved["bound_scale"].astype(float)))
     meta = engine.meta
@@ -344,10 +331,4 @@ def wand_search_batch(engine, queries: list[tuple[str, str]],
             .cogroup(deleted.groupBy("shard"))
             .applyInPandas(shard_fn_del, schema=WAND_BATCH_OUT_SCHEMA)
         )
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("url"))
-    return (
-        per_shard.join(engine._doc_map(), ["shard", "local_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "rank", "url", "score")
-    )
+    return topk_by_qid(per_shard.join(engine._doc_map(), ["shard", "local_id"]), k)

@@ -10,6 +10,7 @@
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -97,14 +98,50 @@ def test_ann_probe_filters_reach_scan(spark, tmp_dir):
     assert "PartitionFilters" in plan2 and "centroid_id" in plan2
 
 
-def test_search_ranks_the_topk_cut_with_one_window(spark, built_index):
-    """search() attaches its rank with a row_number window directly
-    above the TakeOrderedAndProject cut: the window's input is the k
-    rows, with no self-join and no checkpointed RDD in the plan."""
+@pytest.fixture(scope="module")
+def positions_index(spark, fixture_pages_parquet, tmp_path_factory):
+    """A small keep_positions index for the positional top-k paths."""
+    from search_engine_spark.config import EngineConfig
+    from search_engine_spark.indexer import build_index
+
+    cfg = EngineConfig(n_doc_shards=2, n_term_buckets=2, n_bucket_groups=1,
+                       keep_positions=True)
+    out = str(tmp_path_factory.mktemp("pos_index"))
+    build_index(spark, spark.read.parquet(fixture_pages_parquet).limit(80), out, cfg)
+    return out, cfg
+
+
+def _topk_plans():
+    from search_engine_spark import wand
+    from search_engine_spark.federated import federated_search
+
+    q = "world trade"
+    return {
+        "search": lambda e: e.search(q, 10),
+        "dismax_search": lambda e: e.dismax_search(q, 10),
+        "search_matched": lambda e: e.search_matched(q, 10),
+        "search_after": lambda e: e.search_after(q, "http://nowhere", 10),
+        "phrase_search": lambda e: e.phrase_search(q, 10),
+        "proximity_search": lambda e: e.proximity_search(q, 10),
+        "wand_search": lambda e: wand.wand_search(e, q, 10),
+        # the plan shape is what is checked: two members, one index
+        "federated_search": lambda e: federated_search(
+            e.spark, [e.paths.root] * 2, q, 10, e.cfg),
+    }
+
+
+@pytest.mark.parametrize("path", list(_topk_plans()))
+def test_search_ranks_the_topk_cut_with_one_window(spark, built_index,
+                                                  positions_index, path):
+    """Every BM25 top-k attaches its rank with a row_number window
+    directly above the TakeOrderedAndProject cut: the window's input is
+    the k rows, with no nested-loop join, no self-join and no
+    checkpointed RDD in the plan."""
     from search_engine_spark.searcher import SearchEngine
 
-    out, cfg, meta = built_index
-    plan = _plan(SearchEngine(spark, out, cfg).search("world trade", 10))
+    out, cfg = positions_index if path in ("phrase_search", "proximity_search") \
+        else built_index[:2]
+    plan = _plan(_topk_plans()[path](SearchEngine(spark, out, cfg)))
     lines = [ln.strip(" :+-") for ln in plan.splitlines()]
     at = next(i for i, ln in enumerate(lines) if ln.startswith("Window "))
     assert lines[at + 1].startswith("TakeOrderedAndProject(limit=10,")

@@ -6,10 +6,10 @@ import os
 import sys
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators import dedup as D
+from search_engine_spark.searcher import topk
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -17,15 +17,14 @@ SF_001 = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
-# rank step: row_number over the orderBy().limit(k) cut, one execution
+# rank step: searcher.topk — row_number over the orderBy().limit(k) cut,
+# one execution
 
 def test_rank_step_matches_reference(spark):
     df = spark.range(500).repartition(8).select(
         (F.col("id") % 83).alias("v"), F.col("id").alias("k")
     )
-    order = (F.desc("v"), F.asc("k"))
-    out = df.orderBy(*order).limit(12).withColumn(
-        "rank", F.row_number().over(Window.orderBy(*order)))
+    out = topk(df, 12, (F.desc("v"), F.asc("k")))
     want = sorted(((i % 83), i) for i in range(500))
     want = sorted(want, key=lambda t: (-t[0], t[1]))[:12]
     # unsorted: collect() order must already be rank order
@@ -39,9 +38,8 @@ def test_rank_step_ties_on_nonfinal_keys(spark):
     df = spark.createDataFrame(
         [(5, "b"), (5, "a"), (3, "c")], "v long, k string"
     )
-    order = (F.desc("v"), F.asc("k"))
-    out = {r["k"]: r["rank"] for r in df.orderBy(*order).limit(3).withColumn(
-        "rank", F.row_number().over(Window.orderBy(*order))).collect()}
+    out = {r["k"]: r["rank"]
+           for r in topk(df, 3, (F.desc("v"), F.asc("k"))).collect()}
     assert out == {"a": 1, "b": 2, "c": 3}
 
 

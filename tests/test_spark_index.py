@@ -4,6 +4,7 @@ cf, idf), doc stats, and rank-identical top-k with BM25 scores to
 1e-9, honoring quirks Q2-Q4 as documented."""
 
 import math
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,6 +87,36 @@ def test_empty_and_miss_queries(spark, built_index):
     eng = SearchEngine(spark, out, cfg)
     assert eng.search("the of and", 10).count() == 0
     assert eng.search("zzzunknownterm", 10).count() == 0
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """The Spark jobs ``fn()`` starts, read from the status tracker
+    under a job group of their own."""
+    sc = spark.sparkContext
+    gid = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_empty_results_run_no_spark_job(spark, built_index):
+    """A stop-word-only query returns its empty frame with no Spark
+    job, on the single, batch and WAND paths alike."""
+    from search_engine_spark import wand
+
+    out, cfg, meta = built_index
+    eng = SearchEngine(spark, out, cfg)
+    assert _jobs_run_by(spark, lambda: eng.search("world trade", 10).collect()) > 0
+    assert _jobs_run_by(spark, lambda: eng.search("the of and", 10).collect()) == 0
+    assert _jobs_run_by(
+        spark, lambda: eng.search_batch([("q", "the of and")], 10).collect()) == 0
+    assert _jobs_run_by(
+        spark, lambda: wand.wand_search(eng, "the of and", 10).collect()) == 0
+    assert _jobs_run_by(
+        spark, lambda: wand.wand_search_batch(eng, [("q", "the")], 10).collect()) == 0
 
 
 def test_index_is_compressed_binary(spark, built_index):
