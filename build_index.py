@@ -42,9 +42,6 @@ def main() -> None:
     ap.add_argument("--term-buckets", type=int, default=16)
     ap.add_argument("--bucket-groups", type=int, default=2)
     ap.add_argument("--no-stem", action="store_true")
-    ap.add_argument("--partition-raw", action="store_true",
-                    help="raw postings laid out as bucket=N/ dirs "
-                         "(must match the original build's layout)")
     ap.add_argument("--keep-positions", action="store_true",
                     help="pack per-posting position lists (enables phrase search)")
     ap.add_argument("--no-resume", action="store_true")
@@ -71,7 +68,6 @@ def main() -> None:
         n_bucket_groups=args.bucket_groups,
         stem=not args.no_stem,
         keep_positions=args.keep_positions,
-        partition_raw=args.partition_raw,
     )
     if os.path.isdir(args.input) and os.path.exists(
         os.path.join(args.input, "documents.parquet")

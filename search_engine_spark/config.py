@@ -32,23 +32,11 @@ class EngineConfig:
     n_term_buckets: int = 16      # partition dirs by hash(term_key) for pruning
     block_size: int = 128         # postings per WAND block
     n_bucket_groups: int = 8      # stage-2 jobs (resume granularity)
-    partition_raw: bool = False   # True: extra shuffle in stage A lays
-                                  # postings_raw out by bucket dir (pack
-                                  # groups then scan only their slice —
-                                  # worth it when n_bucket_groups is
-                                  # large at extreme scale); False: SPIMI
-                                  # runs written straight from the parse
-                                  # partitions, pack's groupBy is the
-                                  # only full-postings shuffle
     keep_positions: bool = False  # True: pack per-posting position lists
                                   # (delta+varint `poss` blobs) enabling
                                   # SearchEngine.phrase_search; False saves
                                   # the space — reference scoring only ever
                                   # reads the first position (importance)
-
-    # storage: "parquet" in this sandbox; "iceberg" on a cluster with the
-    # runtime jars (writeTo(...).partitionedBy(bucket(term_key)))
-    table_format: str = "parquet"
 
     def stop_set(self) -> frozenset[str]:
         return frozenset(self.stop_words)

@@ -57,9 +57,9 @@ segments until the next compaction.
 ``compact_index`` is the periodic repack: re-runs the derived stages
 over the accumulated raw store (tokenize never re-runs), collapsing
 segments back to one row per (term, shard) with fresh baked bounds and
-dropping ``bound_scale``.  On an Iceberg cluster, each step here is a
-transactional commit (append files / replace table); the local
-parquet dir-swap below is the sandbox stand-in.
+resetting every ``bound_scale`` to 1.0.  On an Iceberg cluster, each
+step here is a transactional commit (append files / replace table);
+the local parquet dir-swap below is the sandbox stand-in.
 
 **Versions.**  Every indexed document carries a generation ``gen``
 (the segment id that introduced it; base build and stream epochs = 0)
@@ -68,9 +68,10 @@ supersedes a re-crawled url at O(delta): version-tombstone the old
 ``(url, gen)`` + append the new version — Lucene's updateDocument
 contract, replacing the old corpus-cost flow delete -> compact -> add.
 ``delete_documents`` writes url-level tombstones (gen NULL = every
-version).  Readers mask resolved (shard, local_id) rows; compaction
-purges raw by (url, gen) and collapses everything back to a
-single-generation store.
+version).  :func:`tombstone_join` is the one rule both kinds follow:
+readers mask the (shard, local_id) rows it kills, and compaction
+purges raw by it and collapses everything back to a single-generation
+store.
 """
 
 from __future__ import annotations
@@ -90,10 +91,10 @@ from .indexer import (
     _dir_bytes,
     _lineage_append,
     dictionary_core,
-    ensure_gen,
     pack_plan,
     read_lineage,
     term_bucket,
+    tokenize_raw,
     with_doc_shard,
 )
 
@@ -102,6 +103,27 @@ from .indexer import (
 # version — the supersede mechanism update_documents uses, leaving the
 # url's replacement version live.
 TOMBSTONE_SCHEMA = "url string, gen int"
+
+
+def read_tombstones(spark: SparkSession, paths: IndexPaths) -> DataFrame:
+    """The persisted tombstone table (explicit schema: url-only rows
+    read ``gen`` as NULL = every version)."""
+    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(paths.tombstones)
+
+
+def tombstone_join(versions: DataFrame, tombstones: DataFrame,
+                   how: str) -> DataFrame:
+    """The one tombstone rule: a ``gen IS NULL`` row kills every
+    version of its url, and a ``(url, gen)`` row kills that one
+    version.  ``versions`` carries ``url`` and ``gen``;
+    ``how="left_semi"`` keeps its killed rows, ``"left_anti"`` its live
+    ones (a semi/anti join never multiplies rows, so duplicate
+    tombstones are harmless)."""
+    t = tombstones.select(F.col("url").alias("_t_url"),
+                          F.col("gen").alias("_t_gen"))
+    kills = (F.col("url") == F.col("_t_url")) & (
+        F.col("_t_gen").isNull() | (F.col("_t_gen") == F.col("gen")))
+    return versions.join(t, kills, how)
 
 
 def check_layout(meta: dict, cfg: EngineConfig,
@@ -128,17 +150,6 @@ def check_layout(meta: dict, cfg: EngineConfig,
             f"cfg.keep_positions={bool(cfg.keep_positions)} does not match "
             f"the index layout ({bool(meta.get('keep_positions'))}); index "
             "mutations must share the build's layout")
-    # partition_raw is baked into the raw store's directory layout
-    # (bucket=N/ hive dirs vs flat files): appending a segment under
-    # the other mode mixes leaf depths and wedges the next
-    # spark.read.parquet(postings_raw) with 'Conflicting directory
-    # structures'.  Older metas lack the key — skip then (flat was the
-    # only mode that existed).
-    if "partition_raw" in meta and bool(meta["partition_raw"]) != bool(cfg.partition_raw):
-        raise ValueError(
-            f"cfg.partition_raw={bool(cfg.partition_raw)} does not match "
-            f"the index layout ({bool(meta['partition_raw'])}); index "
-            "mutations must share the build's raw-store layout")
 
 
 def _next_segment_id(paths: IndexPaths) -> int:
@@ -147,30 +158,24 @@ def _next_segment_id(paths: IndexPaths) -> int:
     return (max(segs) + 1) if segs else 1
 
 
-def _publish_raw(tokenized: DataFrame, paths: IndexPaths, sid: int,
-                 partitioned: bool) -> None:
-    """Write the delta's postings into ``postings_raw`` under
-    ``seg-<sid>-*`` names (idempotent: a replay of the same segment id
-    overwrites its own files, never duplicates — the same publish
-    contract as streaming.ingest epochs)."""
-    scratch = os.path.join(paths.root, f"_seg_scratch_{sid}")
-    if partitioned:
-        tokenized.write.mode("overwrite").partitionBy("bucket").parquet(scratch)
-    else:
-        tokenized.write.mode("overwrite").parquet(scratch)
+def _publish_raw(tokenized: DataFrame, paths: IndexPaths, prefix: str) -> None:
+    """Write raw postings into ``postings_raw`` under ``<prefix>-*``
+    file names: ``seg-<sid>`` for a segment append, ``epoch-<id>`` for
+    a stream epoch.  Idempotent: the rows go to a scratch dir first,
+    and the publish deletes any files an earlier attempt with the same
+    prefix left, so a replay overwrites its own files and never
+    duplicates rows (on a cluster: a transactional commit keyed by the
+    prefix)."""
+    scratch = os.path.join(paths.root, f"_scratch_{prefix}")
+    tokenized.write.mode("overwrite").parquet(scratch)
     os.makedirs(paths.postings_raw, exist_ok=True)
-    for dirpath, _, files in os.walk(paths.postings_raw):
-        for fn in files:
-            if fn.startswith(f"seg-{sid}-"):
-                os.remove(os.path.join(dirpath, fn))
-    for dirpath, _, files in os.walk(scratch):
-        rel = os.path.relpath(dirpath, scratch)
-        dst_dir = paths.postings_raw if rel == "." else os.path.join(paths.postings_raw, rel)
-        os.makedirs(dst_dir, exist_ok=True)
-        for fn in sorted(files):
-            if fn.endswith(".parquet"):
-                os.replace(os.path.join(dirpath, fn),
-                           os.path.join(dst_dir, f"seg-{sid}-{fn}"))
+    for fn in os.listdir(paths.postings_raw):
+        if fn.startswith(f"{prefix}-"):
+            os.remove(os.path.join(paths.postings_raw, fn))
+    for fn in sorted(os.listdir(scratch)):
+        if fn.endswith(".parquet"):
+            os.replace(os.path.join(scratch, fn),
+                       os.path.join(paths.postings_raw, f"{prefix}-{fn}"))
     shutil.rmtree(scratch, ignore_errors=True)
 
 
@@ -205,9 +210,7 @@ def _merge_dictionary(
     o = old.select(
         "term_key", F.col("df").alias("o_df"), F.col("cf").alias("o_cf"),
         F.col("capital").alias("o_cap"), F.col("display").alias("o_disp"),
-        F.col("idf").alias("o_idf"),
-        (F.col("bound_scale") if "bound_scale" in old.columns else F.lit(1.0))
-        .alias("o_scale"),
+        F.col("idf").alias("o_idf"), F.col("bound_scale").alias("o_scale"),
     )
     m = o.join(d, "term_key", "full_outer")
     in_old, in_new = F.col("o_df").isNotNull(), F.col("n_df").isNotNull()
@@ -260,6 +263,50 @@ def _check_no_pending(paths: IndexPaths) -> None:
             "to rebuild them from the raw store before further use")
 
 
+def _open_append(index_dir: str, cfg: EngineConfig,
+                 segment: int | None) -> tuple[IndexPaths, dict, int, float]:
+    """The checks every segment append runs before it reads anything:
+    the layout matches the build's and no earlier append is pending.
+    Returns ``(paths, meta, segment id, start time)``."""
+    paths = IndexPaths(index_dir)
+    with open(paths.meta) as fh:
+        meta = json.load(fh)
+    check_layout(meta, cfg)
+    _check_no_pending(paths)   # before the raw publish, like every guard
+    sid = segment if segment is not None else _next_segment_id(paths)
+    return paths, meta, sid, time.time()
+
+
+def _check_unique_urls(new_pages: DataFrame) -> None:
+    """A url duplicated WITHIN the delta would collapse to one
+    (shard, local_id) in doc_stats while its postings and df count
+    twice — permanent double-scoring."""
+    row = new_pages.agg(
+        F.count(F.lit(1)).alias("n"), F.countDistinct("url").alias("d")
+    ).first()
+    if row["n"] != row["d"]:
+        raise ValueError(
+            f"{row['n'] - row['d']} duplicate url row(s) WITHIN the delta; "
+            "dedupe upstream first (e.g. url_dedup_latest)")
+
+
+def _check_not_indexed(spark: SparkSession, paths: IndexPaths,
+                       urls: DataFrame, where: str) -> None:
+    """A url already indexed (live OR tombstoned) would get a second
+    (shard, local_id) and surface twice in results (and a url-level
+    tombstone would then kill both versions): the raw store holds one
+    version per url outside :func:`update_documents`."""
+    n_dup = (urls.select("url").distinct()
+             .join(spark.read.parquet(paths.doc_stats).select("url"),
+                   "url", "left_semi").count())
+    if n_dup:
+        raise ValueError(
+            f"{n_dup} re-crawled url(s) {where} are already indexed; "
+            "re-crawls go through update_documents (supersede in place) "
+            "or are filtered upstream (streaming.dedup keep-list); "
+            "resurrecting a deleted url requires compact_index first")
+
+
 def add_documents(
     spark: SparkSession,
     new_pages: DataFrame,
@@ -271,53 +318,16 @@ def add_documents(
     index as a new segment.  Returns the updated meta.  Cost is
     O(delta): the old corpus is never re-tokenized, re-aggregated, or
     re-packed.  Call :func:`compact_index` periodically to collapse
-    segments and re-tighten WAND bounds."""
-    paths = IndexPaths(index_dir)
-    with open(paths.meta) as fh:
-        meta = json.load(fh)
-    check_layout(meta, cfg)
-    _check_no_pending(paths)   # before the raw publish, like the guards below
-    sid = segment if segment is not None else _next_segment_id(paths)
-    t0 = time.time()
+    segments and re-tighten WAND bounds.
 
-    # guards BEFORE any publish — raising after the raw publish would
-    # leave poisoned seg files for the next compaction.
-    # (a) a url duplicated WITHIN the delta would collapse to one
-    # (shard, local_id) in doc_stats while its postings and df count
-    # twice — permanent double-scoring;
-    # (b) a url already indexed (live OR tombstoned) would get a
-    # second (shard, local_id) and surface twice in results (and a
-    # url-level tombstone would then kill both versions).  Re-crawls
-    # go through :func:`update_documents` (tombstone-the-old +
-    # append-the-new in one call); fully deleted urls stay dead until
-    # compact_index purges them.
-    row = new_pages.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("url").alias("d")
-    ).first()
-    if row["n"] != row["d"]:
-        raise ValueError(
-            f"{row['n'] - row['d']} duplicate url row(s) WITHIN the delta; "
-            "dedupe upstream first (e.g. dropDuplicates(['url']))")
-    old_stats = spark.read.parquet(paths.doc_stats)
-    n_dup = (new_pages.select("url").distinct()
-             .join(old_stats.select("url"), "url", "left_semi").count())
-    if n_dup:
-        raise ValueError(
-            f"{n_dup} url(s) in the delta are already indexed; "
-            "re-crawled urls go through update_documents (supersede in "
-            "place); resurrecting a deleted url requires compact_index "
-            "first")
-
-    # 1. tokenize the delta once; publish raw under seg-<sid>-* names
-    # (rows stamped gen=sid: the version provenance update/compact key on)
-    tokenized = tokenize_delta(new_pages, cfg, gen=sid)
-    _publish_raw(tokenized, paths, sid, cfg.partition_raw)
-    delta_raw = (
-        spark.read.option("basePath", paths.postings_raw)
-        .option("pathGlobFilter", f"seg-{sid}-*")
-        .parquet(paths.postings_raw)
-    )
-    return _append_segment(spark, delta_raw, paths, cfg, meta, sid, t0)
+    Every guard runs BEFORE any publish — raising after the raw
+    publish would leave poisoned seg files for the next compaction.
+    Re-crawls go through :func:`update_documents`; fully deleted urls
+    stay dead until compact_index purges them."""
+    paths, meta, sid, t0 = _open_append(index_dir, cfg, segment)
+    _check_unique_urls(new_pages)
+    _check_not_indexed(spark, paths, new_pages, "in the delta")
+    return _publish_segment(spark, new_pages, paths, cfg, meta, sid, t0)
 
 
 def update_documents(
@@ -360,30 +370,11 @@ def update_documents(
     mid-call can leave the url temporarily ABSENT — re-running the
     same update (idempotent per segment id) or compacting repairs it.
     """
-    paths = IndexPaths(index_dir)
-    with open(paths.meta) as fh:
-        meta = json.load(fh)
-    check_layout(meta, cfg)
-    _check_no_pending(paths)
-    old_stats = spark.read.parquet(paths.doc_stats)
-    if "gen" not in old_stats.columns:
-        raise ValueError(
-            "this index predates version generations (no gen column in "
-            "doc_stats); rebuild/compact it with current code before "
-            "using update_documents")
-    sid = segment if segment is not None else _next_segment_id(paths)
-    t0 = time.time()
-
-    row = new_pages.agg(
-        F.count(F.lit(1)).alias("n"), F.countDistinct("url").alias("d")
-    ).first()
-    if row["n"] != row["d"]:
-        raise ValueError(
-            f"{row['n'] - row['d']} duplicate url row(s) WITHIN the delta; "
-            "dedupe upstream first (e.g. url_dedup_latest)")
+    paths, meta, sid, t0 = _open_append(index_dir, cfg, segment)
+    _check_unique_urls(new_pages)
     delta_urls = new_pages.select("url").distinct()
     if os.path.isdir(paths.tombstones):
-        dead = (spark.read.schema(TOMBSTONE_SCHEMA).parquet(paths.tombstones)
+        dead = (read_tombstones(spark, paths)
                 .filter(F.col("gen").isNull()).select("url").distinct())
         n_dead = delta_urls.join(dead, "url", "left_semi").count()
         if n_dead:
@@ -397,7 +388,7 @@ def update_documents(
     # crash guarantee).  Re-tombstoning an already-superseded gen is
     # harmless (readers take DISTINCT; purge anti-joins).
     victims = (
-        ensure_gen(old_stats)
+        spark.read.parquet(paths.doc_stats)
         .join(delta_urls, "url", "left_semi")
         .select("url", "gen").distinct()
     )
@@ -409,13 +400,19 @@ def update_documents(
         }])
 
     # 2-6. ordinary segment append of the new versions (gen = sid)
-    tokenized = tokenize_delta(new_pages, cfg, gen=sid)
-    _publish_raw(tokenized, paths, sid, cfg.partition_raw)
-    delta_raw = (
-        spark.read.option("basePath", paths.postings_raw)
-        .option("pathGlobFilter", f"seg-{sid}-*")
-        .parquet(paths.postings_raw)
-    )
+    return _publish_segment(spark, new_pages, paths, cfg, meta, sid, t0)
+
+
+def _publish_segment(spark: SparkSession, new_pages: DataFrame,
+                     paths: IndexPaths, cfg: EngineConfig, meta: dict,
+                     sid: int, t0: float) -> dict:
+    """Tokenize the delta once, publish its raw postings under
+    ``seg-<sid>-*`` names (rows stamped gen=sid: the version
+    provenance update/compact key on), read them back and append them
+    as segment ``sid``."""
+    _publish_raw(tokenize_raw(new_pages, cfg, gen=sid), paths, f"seg-{sid}")
+    delta_raw = (spark.read.option("pathGlobFilter", f"seg-{sid}-*")
+                 .parquet(paths.postings_raw))
     return _append_segment(spark, delta_raw, paths, cfg, meta, sid, t0)
 
 
@@ -444,12 +441,6 @@ def _append_segment(
     with open(pending_segment_marker(paths), "w") as fh:
         fh.write(str(sid))
     old_stats = spark.read.parquet(paths.doc_stats)
-    # doc_stats written before the gen column existed: appending
-    # gen-carrying rows would mix parquet schemas within one table, so
-    # such an index keeps the legacy url-keyed layout (exact — one
-    # version per url is its invariant; update_documents refuses it)
-    has_gen = "gen" in old_stats.columns
-    delta_raw = ensure_gen(delta_raw)
 
     # 2. doc_stats: append, local ids above each shard's existing max
     bases = old_stats.groupBy("shard").agg(F.max("local_id").alias("base"))
@@ -464,16 +455,14 @@ def _append_segment(
     )
     delta_stats = with_doc_shard(delta_stats, cfg)
     w = Window.partitionBy("shard").orderBy("url")
-    stat_cols = ["url", "length", "max_tf", "unique_terms", "shard", "local_id"]
-    if has_gen:
-        stat_cols.insert(4, "gen")
     delta_stats = (
         delta_stats.join(bases, "shard", "left")
         .withColumn(
             "local_id",
             (F.coalesce("base", F.lit(0)) + F.row_number().over(w)).cast("long"),
         )
-        .select(*stat_cols)
+        .select("url", "length", "max_tf", "unique_terms", "gen", "shard",
+                "local_id")
     )
     delta_stats.write.mode("append").partitionBy("shard").parquet(paths.doc_stats)
 
@@ -494,27 +483,18 @@ def _append_segment(
      .write.mode("overwrite").partitionBy("bucket").parquet(tmp_dict))
     _swap_dir(tmp_dict, paths.dictionary)
 
-    # 4. entities: append the delta's rows (per-doc projection; gen
-    # rides along iff the stored table carries it — same schema rule
-    # as doc_stats)
+    # 4. entities: append the delta's rows (per-doc projection)
     from .operators.entities import doc_entities
 
-    ents_delta = delta_raw if has_gen else delta_raw.drop("gen")
-    ents = with_doc_shard(doc_entities(ents_delta), cfg)
+    ents = with_doc_shard(doc_entities(delta_raw), cfg)
     (ents.repartition(min(cfg.n_doc_shards, 8), F.col("shard"))
      .write.mode("append").partitionBy("shard").parquet(paths.entities))
 
-    # 5. pack ONLY the delta, with the refreshed idf/avgdl.  The doc
-    # map keeps the gen key when available so an updated url's new
-    # postings land on the NEW (shard, local_id), not the superseded
-    # row's (pack_plan joins on (url, gen) then)
+    # 5. pack ONLY the delta, with the refreshed idf/avgdl.  pack_plan
+    # joins the doc map on (url, gen), so an updated url's new postings
+    # land on the NEW (shard, local_id), not the superseded row's
     dictionary = spark.read.parquet(paths.dictionary)
-    map_cols = ["url", "shard", "local_id", "length"]
-    if has_gen:
-        map_cols.insert(1, "gen")
-    doc_map = merged_stats.select(*map_cols)
-    if has_gen:
-        doc_map = ensure_gen(doc_map)
+    doc_map = merged_stats.select("url", "gen", "shard", "local_id", "length")
     keep_positions = bool(meta.get("keep_positions")) and "positions" in delta_raw.columns
     if bool(meta.get("keep_positions")) and "positions" not in delta_raw.columns:
         raise ValueError("index keeps positions but cfg.keep_positions is off")
@@ -537,15 +517,6 @@ def _append_segment(
     }])
     os.remove(pending_segment_marker(paths))
     return meta
-
-
-def tokenize_delta(new_pages: DataFrame, cfg: EngineConfig,
-                   gen: int = 0) -> DataFrame:
-    from .plans.tokenize import tokenize_pages
-
-    return (tokenize_pages(new_pages, cfg)
-            .withColumn("bucket", term_bucket(cfg))
-            .withColumn("gen", F.lit(int(gen)).cast("int")))
 
 
 def delete_documents(
@@ -705,8 +676,9 @@ def compact_index(spark: SparkSession, index_dir: str,
     """Collapse segments and purge tombstones: re-run the derived
     stages over the accumulated raw postings (tokenize never re-runs),
     restoring one row per (term, shard) with freshly baked WAND bounds
-    and a bound_scale-free dictionary.  This is exactly the streaming
-    refresh path — same lineage machinery, same resume safety.
+    and every ``bound_scale`` back at 1.0.  This is exactly the
+    streaming refresh path — same lineage machinery, same resume
+    safety.
 
     When a tombstone table exists, the raw postings store is first
     rewritten WITHOUT the deleted urls (one anti-join scan — the
@@ -728,26 +700,13 @@ def compact_index(spark: SparkSession, index_dir: str,
     shutil.rmtree(paths.postings_raw + "__new", ignore_errors=True)
     if os.path.isdir(paths.tombstones):
         t0 = time.time()
-        # the explicit read schema makes legacy url-only tombstone
-        # files and (url, gen) version rows coexist (missing column
-        # reads as NULL = every version)
-        dead = spark.read.schema(TOMBSTONE_SCHEMA).parquet(paths.tombstones)
-        raw = ensure_gen(spark.read.parquet(paths.postings_raw))
-        full = dead.filter(F.col("gen").isNull()).select("url").distinct()
-        vers = (dead.filter(F.col("gen").isNotNull())
-                .select("url", "gen").distinct())
-        # url-level tombstones kill every version; version tombstones
-        # kill exactly the superseded (url, gen) — the update's
-        # replacement rows (a different gen) survive.  The rewrite
-        # materializes gen as a real column, so a crash-resumed
-        # re-purge stays exact (file names no longer matter).
-        kept = (raw.join(full, "url", "left_anti")
-                .join(vers, ["url", "gen"], "left_anti"))
+        # an update's replacement rows (a different gen) survive their
+        # version tombstone; gen is a real column, so a crash-resumed
+        # re-purge stays exact (file names no longer matter)
+        kept = tombstone_join(spark.read.parquet(paths.postings_raw),
+                              read_tombstones(spark, paths), "left_anti")
         tmp = paths.postings_raw + "__new"
-        if "bucket" in raw.columns and cfg.partition_raw:
-            kept.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        else:
-            kept.write.mode("overwrite").parquet(tmp)
+        kept.write.mode("overwrite").parquet(tmp)
         # keep the old raw store until the new one is in place: raw is
         # the source of truth, a crash must never leave zero copies.
         # (On Iceberg this whole block is one REPLACE TABLE commit.)

@@ -3,10 +3,12 @@
 Stages (each materialized => a resume checkpoint, tracked in the
 ``lineage`` table):
 
-A. **tokenize**: pages -> ``postings_raw`` parquet, partitioned by
-   ``bucket = pmod(xxhash64(term_key), n_term_buckets)``.  This is the
-   SPIMI run store: the expensive Arrow-UDF tokenize pass happens
-   exactly once; everything later is relational I/O over its output.
+A. **tokenize**: pages -> ``postings_raw``, flat parquet files written
+   straight from the parse partitions (:func:`tokenize_raw`: every row
+   carries its term's ``bucket = pmod(xxhash64(term_key),
+   n_term_buckets)`` and its version ``gen``).  This is the SPIMI run
+   store: the expensive Arrow-UDF tokenize pass happens exactly once;
+   everything later is relational I/O over its output.
 B. **doc stats**: groupBy(url) aggregate -> ``doc_stats`` with
    per-doc-shard local ids (``shard = pmod(xxhash64(url),
    n_doc_shards)``, ``local_id`` = rank of url inside the shard).
@@ -15,7 +17,9 @@ B. **doc stats**: groupBy(url) aggregate -> ``doc_stats`` with
    pack/score group ever exceeds the shard's doc count (the reference
    has no equivalent — single process; the north rule requires this).
 C. **dictionary**: groupBy(term_key) -> (df, cf, idf=log2(N/df),
-   display-case via bool_and(capital) — quirk Q7 made order-independent).
+   display-case via bool_and(capital) — quirk Q7 made order-independent,
+   ``bound_scale`` = 1.0: the WAND bounds are exact until a segment
+   append inflates them, incremental.py).
 D. **pack**: per bucket-group job (resume unit): raw ⋈ doc_stats ⋈
    dictionary -> groupBy(term_key, shard) -> applyInPandas delta+varint
    pack with per-block max scores -> ``index`` parquet partitioned by
@@ -220,6 +224,17 @@ def term_bucket(cfg: EngineConfig, col: str = "term_key"):
     return F.pmod(F.xxhash64(F.col(col)), F.lit(cfg.n_term_buckets)).cast("int")
 
 
+def tokenize_raw(pages: DataFrame, cfg: EngineConfig, gen: int = 0) -> DataFrame:
+    """Pages -> rows of the one ``postings_raw`` schema: the tokenize
+    kernel's postings plus the term's ``bucket`` and the version
+    generation ``gen`` (0 for the base build and stream epochs, the
+    segment id for a segment append).  Build stage A, stream epochs and
+    segment appends all write through it."""
+    return (tokenize_pages(pages, cfg)
+            .withColumn("bucket", term_bucket(cfg))
+            .withColumn("gen", F.lit(int(gen)).cast("int")))
+
+
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -234,7 +249,7 @@ def build_index(
     os.makedirs(out_dir, exist_ok=True)
     done = _lineage_done(spark, paths) if resume else set()
 
-    # ---- stage A: tokenize -> postings_raw (partitioned by term bucket)
+    # ---- stage A: tokenize -> postings_raw
     if ("tokenize", "all") not in done:
         t0 = time.time()
         # an under-split input serializes the (CPU-bound) tokenize
@@ -266,26 +281,11 @@ def build_index(
                 spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
             if pages.rdd.getNumPartitions() < 2 * par:
                 pages = pages.repartition(2 * par)
-            tokenized = (tokenize_pages(pages, cfg)
-                         .withColumn("bucket", term_bucket(cfg))
-                         .withColumn("gen", F.lit(0).cast("int")))
-            if cfg.partition_raw:
-                # bucket-dir layout: costs one extra full-postings shuffle
-                # here, buys partition-pruned pack-group scans.  Salt keeps
-                # >1 write task per bucket when the cluster is larger than
-                # the bucket count (without the repartition, partitionBy
-                # fans tasks x buckets small files).
-                salt_mod = max(1, par // cfg.n_term_buckets)
-                write_salt = F.pmod(F.xxhash64("url"), F.lit(salt_mod)).cast("int")
-                (tokenized.repartition(cfg.n_term_buckets * salt_mod, F.col("bucket"), write_salt)
-                 .write.mode("overwrite").partitionBy("bucket").parquet(paths.postings_raw))
-            else:
-                # SPIMI proper: per-partition runs straight out of the
-                # parse tasks; the pack stage's groupBy(bucket, shard) is
-                # the single full-postings shuffle (the reference's
-                # external merge, Indexer.java:198-296, done by the
-                # shuffle service)
-                tokenized.write.mode("overwrite").parquet(paths.postings_raw)
+            # SPIMI proper: per-partition runs straight out of the parse
+            # tasks; the pack stage's groupBy(bucket, shard) is the single
+            # full-postings shuffle (the reference's external merge,
+            # Indexer.java:198-296, done by the shuffle service)
+            tokenize_raw(pages, cfg).write.mode("overwrite").parquet(paths.postings_raw)
         finally:
             if input_bytes:
                 if old_split is None:
@@ -297,7 +297,7 @@ def build_index(
             "bytes": _dir_bytes(paths.postings_raw), "seconds": time.time() - t0,
         }])
 
-    raw = ensure_gen(spark.read.parquet(paths.postings_raw))
+    raw = spark.read.parquet(paths.postings_raw)
 
     # ---- stage B: doc_stats + per-shard local ids
     if ("doc_stats", "all") not in done:
@@ -337,6 +337,7 @@ def build_index(
             dictionary_core(raw)
             .withColumn("idf", F.log2(F.lit(float(n_docs)) / F.col("df")))
             .withColumn("bucket", term_bucket(cfg))
+            .withColumn("bound_scale", F.lit(1.0))
         )
         (dictionary.repartition(cfg.n_term_buckets, F.col("bucket"))
          .sortWithinPartitions("term_key")
@@ -371,12 +372,11 @@ def build_index(
         "n_term_buckets": cfg.n_term_buckets,
         "block_size": cfg.block_size,
         "keep_positions": bool(cfg.keep_positions and "positions" in raw.columns),
-        "partition_raw": bool(cfg.partition_raw),
     }
 
     # ---- stage D: pack, one job per bucket group (resume granularity)
     dictionary = spark.read.parquet(paths.dictionary)
-    doc_map = ensure_gen(doc_stats).select("url", "gen", "shard", "local_id", "length")
+    doc_map = doc_stats.select("url", "gen", "shard", "local_id", "length")
     keep_positions = cfg.keep_positions and "positions" in raw.columns
 
     groups = _bucket_groups(cfg)
@@ -525,15 +525,12 @@ def pack_plan(
             "important", "idf"]
     if keep_positions:
         cols.append("positions")
-    # join on (url, gen) when both sides carry the generation column:
-    # after update_documents a url may have several doc_stats rows (old
-    # tombstoned version + live version) and the gen key maps each raw
-    # posting row to exactly ITS version's (shard, local_id)
-    join_keys = (["url", "gen"]
-                 if "gen" in raw.columns and "gen" in doc_map.columns
-                 else ["url"])
+    # join on (url, gen): after update_documents a url may have several
+    # doc_stats rows (old tombstoned version + live version) and the gen
+    # key maps each raw posting row to exactly ITS version's
+    # (shard, local_id)
     part = (
-        raw.join(doc_map, join_keys)
+        raw.join(doc_map, ["url", "gen"])
         .join(dictionary.select("term_key", "idf"), "term_key")
         .select(*cols)
     )
@@ -568,16 +565,10 @@ def snapshot_index(index_dir: str, out_dir: str) -> dict:
     fingerprint (== the source's at copy time; side-car layouts
     stamped against the SOURCE keep serving the source, never the
     copy — their meta pins ``index_dir`` by absolute path)."""
-    import shutil
-
-    from .incremental import pending_segment_marker
+    from .incremental import _check_no_pending
 
     paths = IndexPaths(index_dir)
-    if os.path.exists(pending_segment_marker(paths)):
-        raise RuntimeError(
-            "index has an unfinished segment append (pending_segment "
-            "marker) — a snapshot now would freeze the torn state; "
-            "compact or refresh first")
+    _check_no_pending(paths)
     if os.path.exists(out_dir) and os.listdir(out_dir):
         raise RuntimeError(f"snapshot target {out_dir} exists and is not empty")
     tmp = f"{out_dir}.snap{os.getpid()}"

@@ -13,7 +13,7 @@ Reference semantics:
 projection — no extra pass over the text); ``top_entities`` is a
 broadcast join with the dictionary df plus a per-doc window top-k.
 At web scale the entities table is a small projection of the postings
-(capitalized display terms only) partitioned like ``postings_raw``.
+(capitalized display terms only), partitioned by doc shard.
 """
 
 from __future__ import annotations
@@ -23,19 +23,17 @@ from pyspark.sql import functions as F
 
 
 def doc_entities(tokenized: DataFrame) -> DataFrame:
-    """(url, term, term_key, new_tf[, gen]) for capitalized doc-level
+    """(url, term, term_key, new_tf, gen) for capitalized doc-level
     terms (A7; the +10 importance boost per Indexer.java:89-92).  The
-    ``gen`` version column rides along when the postings carry it, so
-    a superseded version's entity rows stay maskable (searcher
-    ``entities_top5`` anti-joins version tombstones on (url, gen))."""
-    cols = [
+    ``gen`` version column rides along so a superseded version's
+    entity rows stay maskable (searcher ``entities_top5`` applies the
+    tombstone rule on (url, gen))."""
+    return tokenized.filter(F.col("capital")).select(
         F.col("url"), F.col("term"), F.col("term_key"),
         (F.col("tf") + F.when(F.col("important"), F.lit(10)).otherwise(F.lit(0)))
         .cast("int").alias("new_tf"),
-    ]
-    if "gen" in tokenized.columns:
-        cols.append(F.col("gen"))
-    return tokenized.filter(F.col("capital")).select(*cols)
+        F.col("gen"),
+    )
 
 
 def top_entities(entities: DataFrame, dictionary: DataFrame, k: int = 5) -> DataFrame:

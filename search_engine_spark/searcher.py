@@ -35,6 +35,12 @@ from pyspark.sql import functions as F
 
 from .codec import bm25_contribution, decode_rows
 from .config import DEFAULT, EngineConfig
+from .incremental import (
+    TOMBSTONE_SCHEMA,
+    _check_no_pending,
+    read_tombstones,
+    tombstone_join,
+)
 from .indexer import IndexPaths
 from .textproc import parse_doc
 
@@ -265,16 +271,8 @@ class SearchEngine:
         # derived tables may disagree (grown doc_stats, old meta, or a
         # swapped dictionary with unpacked postings) and would score
         # silently wrong.  compact/refresh rebuilds from raw and clears
-        # the marker.  The marker path comes from the ONE writer-side
-        # helper (incremental.pending_segment_marker) so a rename can
-        # never disarm this guard.
-        from .incremental import pending_segment_marker
-
-        if os.path.exists(pending_segment_marker(self.paths)):
-            raise RuntimeError(
-                "index has an unfinished segment append (pending_segment "
-                "marker) — run compact_index / index_admin.py compact to "
-                "rebuild the derived tables before serving queries")
+        # the marker.
+        _check_no_pending(self.paths)
         with open(self.paths.meta) as fh:
             self.meta = json.load(fh)
         self._stop = cfg.stop_set()
@@ -310,13 +308,9 @@ class SearchEngine:
         replacement live (an update).  None when there are no deletes
         (the common case — every query path then skips its anti-join
         entirely)."""
-        from .incremental import TOMBSTONE_SCHEMA
-
         parts: list[DataFrame] = []
         if os.path.isdir(self.paths.tombstones):
-            # explicit schema: legacy url-only files read gen as NULL
-            parts.append(self.spark.read.schema(TOMBSTONE_SCHEMA)
-                         .parquet(self.paths.tombstones))
+            parts.append(read_tombstones(self.spark, self.paths))
         if self._overlay_deleted:
             parts.append(self.spark.createDataFrame(
                 [(u, None) for u in self._overlay_deleted], TOMBSTONE_SCHEMA))
@@ -328,37 +322,35 @@ class SearchEngine:
         return out.distinct()
 
     def deleted_docs(self) -> DataFrame | None:
-        """(shard, local_id) of tombstoned doc VERSIONS as a lazy
-        plan, or None when no deletes exist.  Lucene visibility
-        semantics: deleted docs leave every result immediately, while
-        corpus stats (N, df, avgdl) stay as-packed until
-        ``compact_index`` purges — so surviving docs' scores are
-        bit-identical to their pre-delete scores.  The tombstone table
-        is delta-sized between compactions; the joins below stay
-        distributed (no driver collect), so an unusually large delete
-        batch degrades, never OOMs."""
-        if self._deleted_plan is _UNSET:
-            rows = self._tombstone_rows()
-            if rows is None:
-                self._deleted_plan = None
-            else:
-                from .indexer import ensure_gen
+        """(shard, local_id) of tombstoned doc VERSIONS, or None when
+        no live doc is tombstoned.  Lucene visibility semantics:
+        deleted docs leave every result immediately, while corpus
+        stats (N, df, avgdl) stay as-packed until ``compact_index``
+        purges — so surviving docs' scores are bit-identical to their
+        pre-delete scores.
 
-                stats = ensure_gen(self._doc_stats).select(
-                    "url", F.col("gen").alias("doc_gen"), "shard", "local_id")
-                self._deleted_plan = (
-                    rows.join(stats, "url")
-                    .filter(F.col("gen").isNull()
-                            | (F.col("gen") == F.col("doc_gen")))
-                    .select("shard", "local_id").distinct()
-                )
+        The mask is resolved once per :meth:`refresh` and collected to
+        the driver: it is delta-sized, because compaction bounds it.
+        Rebuilt from pandas it plans as a sized local relation, so
+        every anti-join against it broadcasts at plan time instead of
+        shuffling the posting side first."""
+        if self._deleted_plan is _UNSET:
+            plan = None
+            rows = self._tombstone_rows()
+            if rows is not None:
+                mask = tombstone_join(
+                    self._doc_stats.select("url", "gen", "shard", "local_id"),
+                    rows, "left_semi",
+                ).select("shard", "local_id").distinct().toPandas()
+                if not mask.empty:
+                    plan = self.spark.createDataFrame(
+                        mask, "shard int, local_id long")
+            self._deleted_plan = plan
         return self._deleted_plan
 
     def _drop_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join a (shard, local_id)-keyed frame against the
-        tombstones; no-op (no added plan nodes) when none exist.  No
-        forced broadcast — AQE broadcasts the delta-sized tombstone
-        side when it is actually small."""
+        tombstone mask; no-op (no added plan nodes) when none exist."""
         dead = self.deleted_docs()
         if dead is None:
             return df
@@ -394,24 +386,16 @@ class SearchEngine:
         to the driver: the broadcast-the-query-not-the-dictionary
         pattern (SURVEY §4: the full dictionary is too big at 10^12
         docs; the query's rows are tiny)."""
+        # bound_scale: the accumulated WAND bound inflation per term
+        # (incremental.py); 1.0 while the bounds are exact
+        cols = ["term_key", "df", "cf", "idf", "bucket", "bound_scale"]
         if not term_keys:
-            return pd.DataFrame(
-                columns=["term_key", "df", "cf", "idf", "bucket", "bound_scale"])
-        cols = ["term_key", "df", "cf", "idf", "bucket"]
-        # bound_scale exists once incremental segments were added: the
-        # accumulated WAND bound inflation per term (incremental.py).
-        # A freshly built dictionary lacks it — scale 1 (bounds exact).
-        has_scale = "bound_scale" in self._dictionary.columns
-        if has_scale:
-            cols.append("bound_scale")
-        rows = (
+            return pd.DataFrame(columns=cols)
+        return (
             self._dictionary.filter(F.col("term_key").isin(term_keys))
             .select(*cols)
             .toPandas()
         )
-        if not has_scale:
-            rows["bound_scale"] = 1.0
-        return rows
 
     # -- scoring --------------------------------------------------------------
     def _scan_index(self, resolved: pd.DataFrame) -> DataFrame:
@@ -1989,20 +1973,7 @@ class SearchEngine:
         ents = self.spark.read.parquet(self.paths.entities)
         dead = self._tombstone_rows()
         if dead is not None:
-            from .indexer import ensure_gen
-
-            had_gen = "gen" in ents.columns
-            ents = ensure_gen(ents)
-            # url-level tombstones mask every version; version
-            # tombstones mask only the superseded generation's rows
-            ents = (
-                ents.join(dead.filter(F.col("gen").isNull()).select("url"),
-                          "url", "left_anti")
-                .join(dead.filter(F.col("gen").isNotNull()).select("url", "gen"),
-                      ["url", "gen"], "left_anti")
-            )
-            if not had_gen:
-                ents = ents.drop("gen")
+            ents = tombstone_join(ents, dead, "left_anti")
         if urls is not None:
             ents = ents.filter(F.col("url").isin(urls))
         return top_entities(ents, self._dictionary, k)

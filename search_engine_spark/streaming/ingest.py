@@ -6,10 +6,11 @@ is that story on Structured Streaming:
 
 1. ``stream_ingest`` watches a pages directory (file source — the
    stand-in for a Kafka/Iceberg CDC feed), tokenizes each micro-batch
-   with the SAME Arrow kernel as the batch build, appends to
-   ``postings_raw`` (bucket-partitioned), and records one lineage row
-   per epoch.  Exactly-once = streaming checkpoint (which epochs ran)
-   PLUS an idempotent per-epoch publish (replayed epochs overwrite
+   with the SAME tokenize-to-raw expression as the batch build
+   (``indexer.tokenize_raw``), publishes to ``postings_raw`` as
+   ``epoch-<id>-*`` files, and records one lineage row per epoch.
+   Exactly-once = streaming checkpoint (which epochs ran) PLUS an
+   idempotent per-epoch publish (replayed epochs overwrite
    their own files, never append duplicates); ``availableNow`` drains
    what's there and stops (the test/ops mode).
 2. ``refresh_index`` invalidates the DERIVED stages (doc_stats /
@@ -24,22 +25,29 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
+from ..incremental import (
+    _append_segment,
+    _check_not_indexed,
+    _next_segment_id,
+    _publish_raw,
+    check_layout,
+    pending_segment_marker,
+    read_tombstones,
+)
 from ..indexer import (
     IndexPaths,
     _lineage_append,
     build_index,
     read_lineage,
-    term_bucket,
+    tokenize_raw,
     write_lineage,
 )
-from ..plans.tokenize import tokenize_pages
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -61,33 +69,14 @@ def stream_ingest(
         t0 = time.time()
         # gen=0 like the base build: a url enters the stream once (the
         # re-crawl guard in refresh_incremental), so generation 0
-        # uniquely names its version until an update supersedes it
-        tokenized = (tokenize_pages(batch, cfg)
-                     .withColumn("bucket", term_bucket(cfg))
-                     .withColumn("gen", F.lit(0).cast("int")))
-        # IDEMPOTENT epoch publish (exactly-once, not just
-        # at-least-once): foreachBatch replays an epoch if the job
-        # dies between the data write and the checkpoint commit, so a
-        # plain mode("append") would duplicate postings rows and
-        # silently inflate tf/df on the next refresh.  Instead each
-        # epoch writes to a scratch dir and is then published under
-        # deterministic ``epoch-<id>-*`` names, deleting any partial
-        # files a crashed attempt of the SAME epoch left — replays
-        # overwrite, never duplicate.  (On a cluster this publish is
-        # an Iceberg/Delta transactional commit keyed by epoch_id;
-        # same layout: plain files, bucket as a column, so appends
-        # and full builds interleave.)
-        scratch = os.path.join(paths.root, "_epoch_scratch")
-        tokenized.write.mode("overwrite").parquet(scratch)
-        os.makedirs(paths.postings_raw, exist_ok=True)
-        for fn in os.listdir(paths.postings_raw):
-            if fn.startswith(f"epoch-{epoch_id}-"):
-                os.remove(os.path.join(paths.postings_raw, fn))
-        for fn in sorted(os.listdir(scratch)):
-            if fn.endswith(".parquet"):
-                os.replace(os.path.join(scratch, fn),
-                           os.path.join(paths.postings_raw, f"epoch-{epoch_id}-{fn}"))
-        shutil.rmtree(scratch, ignore_errors=True)
+        # uniquely names its version until an update supersedes it.
+        # The publish is IDEMPOTENT (exactly-once, not just
+        # at-least-once): foreachBatch replays an epoch if the job dies
+        # between the data write and the checkpoint commit, and a
+        # replay overwrites the epoch's own files instead of
+        # duplicating postings rows (which would silently inflate
+        # tf/df on the next refresh).
+        _publish_raw(tokenize_raw(batch, cfg), paths, f"epoch-{epoch_id}")
         _lineage_append(spark, paths, [{
             "stage": "stream_batch", "key": str(epoch_id),
             "seconds": time.time() - t0,
@@ -122,12 +111,9 @@ def refresh_index(spark: SparkSession, index_dir: str,
     url, and the rebuild's per-url aggregation would merge them into
     one corrupt document.  ``compact_index`` purges superseded
     generations first and re-enters here with ``_raw_is_purged``."""
-    from ..incremental import TOMBSTONE_SCHEMA, check_layout
-
     paths = IndexPaths(index_dir)
     if not _raw_is_purged and os.path.isdir(paths.tombstones):
-        n_vers = (spark.read.schema(TOMBSTONE_SCHEMA)
-                  .parquet(paths.tombstones)
+        n_vers = (read_tombstones(spark, paths)
                   .filter(F.col("gen").isNotNull()).count())
         if n_vers:
             raise RuntimeError(
@@ -149,8 +135,6 @@ def refresh_index(spark: SparkSession, index_dir: str,
     meta = build_index(spark, None, index_dir, cfg, resume=True)
     # the rebuild recreated every derived table from the intact raw
     # store, so a crashed append's pending marker (if any) is repaired
-    from ..incremental import pending_segment_marker
-
     try:
         os.remove(pending_segment_marker(paths))
     except FileNotFoundError:
@@ -196,8 +180,6 @@ def refresh_incremental(spark: SparkSession, index_dir: str,
 
     Requires a servable index (meta.json): the first refresh after a
     cold-start stream must be the full :func:`refresh_index`."""
-    from ..incremental import _append_segment, _next_segment_id, check_layout
-
     paths = IndexPaths(index_dir)
     if not os.path.exists(paths.meta):
         raise ValueError(
@@ -215,11 +197,8 @@ def refresh_incremental(spark: SparkSession, index_dir: str,
         return meta
     t0 = time.time()
     glob = "{" + ",".join(f"epoch-{e}-*" for e in pending) + "}"
-    delta_raw = (
-        spark.read.option("basePath", paths.postings_raw)
-        .option("pathGlobFilter", glob)
-        .parquet(paths.postings_raw)
-    )
+    delta_raw = (spark.read.option("pathGlobFilter", glob)
+                 .parquet(paths.postings_raw))
     # a url ingested twice WITHIN/ACROSS the pending epochs shows up
     # as duplicate (url, term_key) posting rows (tokenize emits one
     # row per doc-term) — it would collapse to one doc in doc_stats
@@ -232,15 +211,7 @@ def refresh_incremental(spark: SparkSession, index_dir: str,
         raise ValueError(
             f"duplicate url(s) within epochs {pending}; dedupe the stream "
             "upstream (streaming.dedup keep-list) before refreshing")
-    old_urls = spark.read.parquet(paths.doc_stats).select("url")
-    n_dup = (delta_raw.select("url").distinct()
-             .join(old_urls, "url", "left_semi").count())
-    if n_dup:
-        raise ValueError(
-            f"{n_dup} re-crawled url(s) in epochs {pending}; the raw store "
-            "must hold one version per url — filter re-crawls upstream "
-            "(streaming.dedup keep-list) or delete_documents + "
-            "compact_index before re-ingesting")
+    _check_not_indexed(spark, paths, delta_raw, f"in epochs {pending}")
     sid = _next_segment_id(paths)
     meta = _append_segment(spark, delta_raw, paths, cfg, meta, sid, t0)
     _lineage_append(spark, paths,

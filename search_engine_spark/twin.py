@@ -39,9 +39,7 @@ def live_raw_postings(spark: SparkSession, engine) -> DataFrame:
     urls superseded by ``incremental.update_documents`` only the
     replacement generation's rows kept (version tombstones are exact
     (url, gen) pairs)."""
-    from .indexer import ensure_gen
-
-    raw = ensure_gen(raw_postings(spark, engine))
+    raw = raw_postings(spark, engine)
     dead = engine._tombstone_rows()
     if dead is None:
         return raw

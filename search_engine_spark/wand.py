@@ -255,8 +255,7 @@ def wand_search(engine, query: str, k: int | None = None) -> DataFrame:
         per_shard = scan.groupBy("shard").applyInPandas(shard_fn, schema=WAND_OUT_SCHEMA)
     else:
         # tombstoned index: ship each shard's deleted local_ids to its
-        # scorer via cogroup — stays fully distributed (no driver-side
-        # collect of the tombstone set), co-partitioned on shard
+        # scorer via cogroup, co-partitioned on shard
         def shard_fn_del(pdf: pd.DataFrame, dele: pd.DataFrame) -> pd.DataFrame:
             return _score_shard(
                 pdf, idf_by_key, k, k1, b, avgdl, blend_a, blend_b, scale_by_key,

@@ -45,6 +45,18 @@ def _top(df):
     return [(r["url"], r["score"]) for r in df.collect()]
 
 
+def _schemas(spark, out):
+    paths = IndexPaths(out)
+    return {t: spark.read.parquet(getattr(paths, t)).schema
+            for t in ("dictionary", "doc_stats", "entities")}
+
+
+def _bound_scales(spark, out):
+    return {r["bound_scale"] for r in
+            spark.read.parquet(IndexPaths(out).dictionary)
+            .select("bound_scale").distinct().collect()}
+
+
 def test_meta_matches_full_build(spark, built_index, inc_index):
     _, _, full_meta = built_index
     out, _ = inc_index
@@ -67,6 +79,21 @@ def test_dictionary_merge_is_exact(spark, built_index, inc_index):
         ir = inc[key]
         assert tuple(fr[c] for c in cols) == tuple(ir[c] for c in cols), key
         assert abs(fr["idf"] - ir["idf"]) < 1e-9, key
+
+
+def test_fresh_build_bounds_are_exact(spark, built_index):
+    """A fresh build stamps every dictionary row with bound_scale 1.0:
+    its baked WAND bounds are tight."""
+    full_out, _, _ = built_index
+    assert _bound_scales(spark, full_out) == {1.0}
+
+
+def test_appended_tables_keep_the_build_schema(spark, built_index, inc_index):
+    """One table schema: segment appends write the dictionary,
+    doc_stats and entities with exactly the build's columns."""
+    full_out, _, _ = built_index
+    inc_out, _ = inc_index
+    assert _schemas(spark, inc_out) == _schemas(spark, full_out)
 
 
 def test_index_actually_has_segments(spark, inc_index):
@@ -209,7 +236,9 @@ def test_compact_collapses_segments_and_keeps_answers(
         .groupBy("term_key", "shard").count().filter(F.col("count") > 1).count()
     )
     assert multi == 0, "compaction must leave one row per (term, shard)"
-    assert "bound_scale" not in spark.read.parquet(IndexPaths(inc_out).dictionary).columns
+    # the bounds are tight again, and the tables keep the one schema
+    assert _bound_scales(spark, inc_out) == {1.0}
+    assert _schemas(spark, inc_out) == _schemas(spark, full_out)
     for q in QUERIES:
         got = _top(eng.search(q, 20))
         assert [u for u, _ in got] == [u for u, _ in before[q]], q

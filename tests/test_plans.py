@@ -149,27 +149,56 @@ def test_search_ranks_the_topk_cut_with_one_window(spark, built_index,
     assert "ExistingRDD" not in plan
 
 
-def test_tombstone_anti_join_broadcasts(spark, built_index):
+def _subtree(plan: str, at: int) -> list[str]:
+    """Line ``at`` of a plan tree string and every line below it in
+    its subtree (deeper indentation of the node name)."""
+    lines = plan.splitlines()
+
+    def col(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out = [lines[at]]
+    for ln in lines[at + 1:]:
+        if col(ln) <= col(lines[at]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_tombstone_anti_join_broadcasts(spark, built_index, tmp_dir):
     """The delete filter must cost a broadcast, not a shuffle: the
-    tombstone side is delta-sized between compactions, so the
-    anti-join on (shard, local_id) should run as a broadcast join of
-    the deleted set against the posting stream — a SortMergeJoin here
-    would shuffle the full per-posting frame on every query.  The
-    tombstone frame has no size estimate before it runs, so the
-    broadcast is AQE's runtime choice: assert on the executed plan."""
+    tombstone mask is delta-sized between compactions, so the
+    anti-join on (shard, local_id) runs as a broadcast join of the
+    mask against the posting stream, and the posting side below it is
+    never shuffled on (shard, local_id).  Both tombstone sources go
+    through the same mask: the persisted table (on a snapshot copy of
+    the shared index) and the constructor overlay."""
+    from search_engine_spark.incremental import delete_documents
+    from search_engine_spark.indexer import snapshot_index
     from search_engine_spark.searcher import SearchEngine
 
     out, cfg, meta = built_index
     clean = SearchEngine(spark, out, cfg)
     dead = [r["url"] for r in clean.search("world trade", 3).collect()]
-    eng = SearchEngine(spark, out, cfg, deleted_urls=dead)
-    res = eng.search("world trade", 10)
-    assert not {r["url"] for r in res.collect()} & set(dead)
-    final = _plan(res).split("== Initial Plan ==")[0]
-    anti = [ln for ln in final.splitlines() if "LeftAnti" in ln]
-    assert anti and all("BroadcastHashJoin" in ln for ln in anti)
-    # no-deletes engines must not pay ANY anti-join node
+    copy = os.path.join(tmp_dir, "ix")
+    snapshot_index(out, copy)
+    delete_documents(spark, dead, copy)
+    for eng in (SearchEngine(spark, copy, cfg),
+                SearchEngine(spark, out, cfg, deleted_urls=dead)):
+        res = eng.search("world trade", 10)
+        assert not {r["url"] for r in res.collect()} & set(dead)
+        final = _plan(res).split("== Initial Plan ==")[0]
+        lines = final.splitlines()
+        anti = [i for i, ln in enumerate(lines) if "LeftAnti" in ln]
+        assert anti and all("BroadcastHashJoin" in lines[i] for i in anti)
+        for i in anti:
+            below = "\n".join(_subtree(final, i))
+            assert "Exchange hashpartitioning(shard" not in below, below
+    # no-deletes engines must not pay ANY anti-join node, and neither
+    # does an overlay that kills no indexed doc
     assert "LeftAnti" not in _plan(clean.search("world trade", 10))
+    assert SearchEngine(spark, out, cfg,
+                        deleted_urls=["nope://absent"]).deleted_docs() is None
 
 
 def test_index_scan_prunes(spark, built_index):
